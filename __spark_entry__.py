@@ -266,6 +266,18 @@ _REGRADE = {
     "text_quality_classifier_scores": 14,
     "corpus_quality_classifier_buckets": 14,
     "streaming_corpus_quality_gate": 14,
+    # dbscan() merges margin copies on a row id instead of coordinate
+    # values, and predict() picks each probe's nearest core with one
+    # aggregate per probe row id (no window, no join-back); all eight
+    # consumers re-verified vs the DuckDB oracle at sf0.001 + sf0.01:
+    "dbscan_flags": 9,
+    "dbscan_flags_64d": 9,
+    "dbscan_core_components": 9,
+    "dbscan_predict_canonical": 9,
+    "dbscan_embeddings": 9,
+    "dbscan_predict_holdout": 9,
+    "dbscan_embeddings_64d": 9,
+    "dbscan_predict_64d": 9,
 }
 
 # _HEAVY — multi-second queries at sf0.01 (iterative ML loops, the

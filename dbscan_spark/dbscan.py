@@ -18,15 +18,20 @@ DataFrame operators so Catalyst plans every distributed step:
                            .applyInPandas(kernel)`` — Arrow-batched numpy
                            DBSCAN per spatial partition, group size bounded
                            by ``max_points_per_partition`` (reference O9-O10).
-5. merge                 — margin points re-keyed to their home partition via
-                           a second broadcast rect join (O12-O13); cluster
-                           adjacency from a self-equi-join on (x, y) (O14);
-                           driver union-find assigns global ids over the
-                           (tiny) local-cluster graph (O15,
-                           DBSCANGraph.scala); broadcast-join relabel
-                           (O16) and an order-insensitive margin dedup
-                           (O17 made deterministic, SURVEY.md §2.3 P5).
-6. union                 — inner ∪ deduped margin (O18); disjoint by the
+5. merge                 — every input row carries a row id from just
+                           before step 3, through the kernel. Margin copies
+                           (tagged by the kernel against their own
+                           partition's ε-shrunk inner box) are grouped by
+                           that id: one ``collect_set`` of (pid, cluster)
+                           per point gives the cross-partition cluster
+                           adjacency (O13-O14); driver union-find assigns
+                           global ids over the (tiny) local-cluster graph
+                           (O15, DBSCANGraph.scala); broadcast-join relabel
+                           (O16) and an order-insensitive margin dedup on
+                           the same id (O17 made deterministic, SURVEY.md
+                           §2.3 P5).
+6. union                 — inner ∪ deduped margin (O18) ∪ the rows with a
+                           non-finite coordinate (noise); disjoint by the
                            strict/inclusive containment rules (P6).
 
 Scale notes (100 TB thinking):
@@ -34,8 +39,8 @@ Scale notes (100 TB thinking):
   the reference; raise ``minimum_rectangle_size`` (i.e. eps) or pre-filter
   if the cell histogram itself would explode.
 * The only shuffles are the histogram aggregate (partial+final combine),
-  the per-partition repartition for the kernel, and the margin self-join;
-  the rectangle and global-id tables are always broadcast.
+  the per-partition repartition for the kernel, and the margin ``groupBy``
+  on the row id; the rectangle and global-id tables are always broadcast.
 * AQE handles residual skew in the kernel shuffle; the BSP bound
   ``max_points_per_partition`` is the primary skew control, exactly as in
   the reference (best-effort under unsplittable hot cells, P8).
@@ -43,33 +48,27 @@ Scale notes (100 TB thinking):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from dbscan_spark.graph import assign_global_ids
 from dbscan_spark.kernel import local_dbscan_matrix
-from dbscan_spark.partitioner import Rectangle, find_partitions, margins
+from dbscan_spark.partitioner import find_partitions, margins
 
-_FLAG_RANK = {"noise": 0, "border": 1, "core": 2}
+_RID = "__dbscan_rid"  # internal row id; never part of a returned frame
 
 
 def _rects_df(spark, margin_list):
-    """Broadcast-able table of (pid, inner, main, outer) rectangle bounds."""
+    """Broadcast-able table of (pid, outer) rectangle bounds."""
     rows = [
-        (
-            pid,
-            inner.x, inner.y, inner.x2, inner.y2,
-            main.x, main.y, main.x2, main.y2,
-            outer.x, outer.y, outer.x2, outer.y2,
-        )
-        for pid, inner, main, outer in margin_list
+        (pid, outer.x, outer.y, outer.x2, outer.y2)
+        for pid, _inner, _main, outer in margin_list
     ]
-    schema = (
-        "pid int, ix double, iy double, ix2 double, iy2 double, "
-        "mx double, my double, mx2 double, my2 double, "
-        "ox double, oy double, ox2 double, oy2 double"
+    return spark.createDataFrame(
+        rows, "pid int, ox double, oy double, ox2 double, oy2 double"
     )
-    return spark.createDataFrame(rows, schema)
 
 
 def dbscan(
@@ -93,11 +92,23 @@ def dbscan(
     across partitions (the same 2-D rule the reference hardwires,
     DBSCANPoint.scala:23-24, generalized instead of imposed).
 
-    Points are identified by their (x, y[, features]) value during the
-    margin merge — duplicate coordinate vectors collapse to one output row
-    in the margin zone, with extra columns resolved by ``max`` (the
-    reference has the same value-identity semantics via its point-keyed
-    dedup map, DBSCAN.scala:204-227).
+    Every input row comes back exactly once, with its own payload, whatever
+    ``max_points_per_partition`` is: each row is tagged with a row id
+    (``monotonically_increasing_id``) just before the assignment join, and
+    the margin merge reconciles a point's copies by that id, so rows with
+    equal coordinates stay separate rows (the reference instead keys its
+    dedup map on the point value, DBSCAN.scala:204-227). The id is
+    computed once, when the cached kernel output materializes. A lost cache
+    block is recomputed from the input, which gives the same ids only if
+    the input itself recomputes deterministically (same partitions, same
+    row order — true of file scans and local data, not of the unordered
+    output of a shuffle).
+
+    Rows whose x or y is null, NaN or ±inf are not clustered: they stay
+    out of the histogram and the partitioner and come back once as
+    ``cluster=0, flag='noise'`` with their own payload. ``eps`` must be
+    finite and > 0 and ``min_points`` ≥ 1; anything else raises
+    ``ValueError`` before any Spark job runs.
 
     Precondition when ``features_col`` is set: ``x_col``/``y_col`` MUST be
     the first two components of the feature vector (the projection the
@@ -106,21 +117,30 @@ def dbscan(
     equality per group and fails the job with a clear error otherwise.
 
     The returned DataFrame is persisted and already materialized (the
-    merge phase is inherently eager — same as the reference); the two
-    internal intermediates are released before returning. The RESULT's
-    cache belongs to the caller: call ``.unpersist()`` (or
+    merge phase is inherently eager — same as the reference); the cached
+    kernel output is released before returning. The RESULT's cache
+    belongs to the caller: call ``.unpersist()`` (or
     ``DBSCANModel.unpersist()``) when done, or a loop of dbscan() calls
     accumulates one cached result per call until LRU eviction.
     """
-    spark = df.sparkSession
     eps = float(eps)  # numpy scalars would poison createDataFrame below
     min_points = int(min_points)
+    if not (math.isfinite(eps) and eps > 0):
+        raise ValueError(f"dbscan: eps must be finite and > 0, got {eps!r}")
+    if min_points < 1:
+        raise ValueError(f"dbscan: min_points must be >= 1, got {min_points}")
+    spark = df.sparkSession
     size = 2.0 * eps  # minimumRectangleSize (DBSCAN.scala:74, P7)
     X, Y = F.col(x_col), F.col(y_col)
+    # false for null, ±inf and NaN (Spark orders NaN above +inf)
+    finite = F.coalesce(
+        (F.abs(X) < math.inf) & (F.abs(Y) < math.inf), F.lit(False)
+    )
 
     # -- 1. grid histogram (only cell counts reach the driver) -------------
     cell_rows = (
-        df.groupBy(
+        df.filter(finite)
+        .groupBy(
             (F.floor(X / size) * size).alias("cx"),
             (F.floor(Y / size) * size).alias("cy"),
         )
@@ -139,19 +159,27 @@ def dbscan(
     rects = _rects_df(spark, margin_list)
 
     # -- 3. assignment join: outer (ε-grown) containment, border-inclusive
-    #       (P6: >= / <= for outer), duplicating margin points -------------
+    #       (P6: >= / <= for outer), duplicating margin points; every copy
+    #       of a row carries the row's id. A non-finite coordinate matches
+    #       no box, so those rows never reach the kernel ------------------
     in_outer = (
         (X >= F.col("ox")) & (X <= F.col("ox2"))
         & (Y >= F.col("oy")) & (Y <= F.col("oy2"))
     )
-    assigned = df.join(F.broadcast(rects), in_outer).select("pid", *df.columns)
+    assigned = (
+        df.withColumn(_RID, F.monotonically_increasing_id())
+        .join(F.broadcast(rects), in_outer)
+        .select("pid", _RID, *df.columns)
+    )
 
     # -- 4. per-partition numpy DBSCAN kernel ------------------------------
     #    The kernel also tags each row's margin candidacy against its OWN
     #    partition's ε-shrunk inner box (a vectorized bound check on data
-    #    already in memory): downstream, inner points are then a plain
-    #    filter instead of a broadcast rect join, and the dest-pid margin
-    #    join only sees the (small) tagged slice instead of every point.
+    #    already in memory). A row with copies in two partitions lies
+    #    within ε of its home box's edge, so every copy is tagged, and the
+    #    merge below only ever sees the (small) tagged slice. The inner and
+    #    outer boxes come from the same ``Rectangle.shrink(±eps)`` float
+    #    expression, so no rounding gap opens between the two tests.
     out_schema = T.StructType(
         assigned.schema.fields
         + [
@@ -209,50 +237,19 @@ def dbscan(
         .persist()
     )
 
-    # -- 5a. margin candidates: in a partition's main box but not strictly
-    #        inside its ε-shrunk inner box (P6: inclusive main, strict inner)
-    in_main = (
-        (X >= F.col("mx")) & (X <= F.col("mx2"))
-        & (Y >= F.col("my")) & (Y <= F.col("my2"))
-    )
-    strictly_in_inner = (
-        (X > F.col("ix")) & (X < F.col("ix2"))
-        & (Y > F.col("iy")) & (Y < F.col("iy2"))
-    )
-    margin_pts = (
-        clustered.filter(F.col("in_margin"))
-        .withColumnRenamed("pid", "src_pid")
-        .join(F.broadcast(rects), in_main & ~strictly_in_inner)
-        .select(
-            F.col("pid").alias("dest_pid"),
-            F.col("src_pid"),
-            *df.columns,
-            "cluster",
-            "flag",
-        )
-        .persist()
-    )
-
-    # -- 5b. adjacency: same point under two different (pid, cluster) ids,
+    # -- 5a. adjacency: same row under two different (pid, cluster) ids,
     #        both non-noise ⇒ those local clusters are one global cluster.
-    #        One collect_set aggregate groups each margin point's
-    #        (src_pid, cluster) sightings per dest partition; the pair
-    #        expansion is a per-row HOF over sets bounded by the number of
-    #        rectangles overlapping one point (≤4 in the BSP grid). This
-    #        replaces a sort-merge SELF-join that shuffled margin_pts
-    #        twice and sorted both sides — one exchange instead of two,
-    #        no sorts, at any scale --------------------------------------
-    ident_cols = [x_col, y_col] + (
-        [features_col] if features_col is not None else []
-    )
+    #        One collect_set aggregate groups each margin row's
+    #        (pid, cluster) copies by row id; the pair expansion is a
+    #        per-row HOF over sets bounded by the number of rectangles
+    #        overlapping one point (≤4 in the BSP grid) -------------------
+    margin = clustered.filter(F.col("in_margin"))
     per_point = (
-        margin_pts.filter(F.col("cluster") > 0)
-        .groupBy("dest_pid", *ident_cols)
+        margin.filter(F.col("cluster") > 0)
+        .groupBy(_RID)
         .agg(
             F.collect_set(
-                F.struct(
-                    F.col("src_pid").alias("p"), F.col("cluster").alias("c")
-                )
+                F.struct(F.col("pid").alias("p"), F.col("cluster").alias("c"))
             ).alias("ids")
         )
     )
@@ -265,7 +262,7 @@ def dbscan(
         "e.p1", "e.c1", "e.p2", "e.c2"
     )
 
-    # -- 5c. driver union-find over local-cluster ids (tiny). The distinct
+    # -- 5b. driver union-find over local-cluster ids (tiny). The distinct
     #        local ids ride along in the SAME job as the adjacency edges
     #        (union with null right-hand side), and ONE distinct over the
     #        fused union dedupes both row kinds (they can't collide: id
@@ -287,55 +284,54 @@ def dbscan(
         [(p, c, g) for (p, c), g in gmap.items()],
         "pid int, cluster long, global_cluster long",
     )
+    gcluster = F.coalesce("global_cluster", F.lit(0))
 
     # -- 6a. inner points: strictly inside own partition's inner box keep
-    #        exactly one copy — the kernel's in_margin tag makes this a
-    #        plain cached-scan filter (no rect join); relabel via broadcast
-    #        map (left join keeps noise at 0) ------------------------------
+    #        exactly one copy — a plain cached-scan filter; relabel via
+    #        broadcast map (left join keeps noise at 0) -------------------
     inner_final = (
         clustered.filter(~F.col("in_margin"))
         .join(F.broadcast(gmap_df), ["pid", "cluster"], "left")
-        .select(
-            *df.columns,
-            F.coalesce("global_cluster", F.lit(0)).alias("cluster"),
-            "flag",
-        )
+        .select(*df.columns, gcluster.alias("cluster"), "flag")
     )
 
-    # -- 6b. margin dedup: order-insensitive replacement for the
+    # -- 6b. margin dedup by row id: order-insensitive replacement for the
     #        reference's nondeterministic "last non-noise wins" fold (P5):
-    #        take max global id (density-connected duplicates share one id)
-    #        and the strongest flag core > border > noise -------------------
+    #        take max global id (density-connected copies share one id)
+    #        and the strongest flag core > border > noise; every copy
+    #        carries the same payload -----------------------------------
     flag_rank = (
         F.when(F.col("flag") == "core", 2)
         .when(F.col("flag") == "border", 1)
         .otherwise(0)
     )
-    identity_cols = [x_col, y_col] + (
-        [features_col] if features_col is not None else []
-    )
-    extra_cols = [c for c in df.columns if c not in identity_cols]
-    gmap_src = gmap_df.withColumnRenamed("pid", "src_pid")
     margin_final = (
-        margin_pts.join(F.broadcast(gmap_src), ["src_pid", "cluster"], "left")
-        .withColumn("gcluster", F.coalesce("global_cluster", F.lit(0)))
-        .groupBy(*identity_cols)
+        margin.join(F.broadcast(gmap_df), ["pid", "cluster"], "left")
+        .groupBy(_RID)
         .agg(
-            F.max("gcluster").alias("cluster"),
+            F.max(gcluster).alias("cluster"),
             F.max(F.struct(flag_rank.alias("r"), F.col("flag"))).alias("_f"),
-            *[F.max(c).alias(c) for c in extra_cols],
+            F.any_value(F.struct(*df.columns)).alias("_row"),
         )
-        .select(*df.columns, "cluster", F.col("_f.flag").alias("flag"))
+        .select("_row.*", "cluster", F.col("_f.flag").alias("flag"))
     )
 
-    # -- 7. materialize the result, then release the internal caches (they
-    #       were only ever needed once more after the merge collect; the
-    #       result keeps full lineage, so fault recovery recomputes rather
-    #       than relying on unreliable checkpoint storage) -----------------
-    result = inner_final.unionByName(margin_final).persist()
+    # -- 6c. rows with a non-finite coordinate: noise, payload untouched --
+    nonfinite = df.filter(~finite).select(
+        *df.columns,
+        F.lit(0).cast("long").alias("cluster"),
+        F.lit("noise").alias("flag"),
+    )
+
+    # -- 7. materialize the result, then release the kernel cache (it was
+    #       only ever needed once more after the merge collect; the result
+    #       keeps full lineage, so fault recovery recomputes rather than
+    #       relying on unreliable checkpoint storage) --------------------
+    result = (
+        inner_final.unionByName(margin_final).unionByName(nonfinite).persist()
+    )
     result.count()
     clustered.unpersist()
-    margin_pts.unpersist()
     return result
 
 
@@ -352,10 +348,14 @@ def predict(
     for real).
 
     A new point joins the cluster of its nearest core point within ε, else
-    noise. Scalable formulation: key core points by their ε-grid cell,
-    explode each new point to its 3×3 candidate cell ring, equi-join on the
-    cell key (shuffle hash join — no cross join), exact-filter by distance,
-    then window top-1. ``model`` is the output of :func:`dbscan`.
+    noise. Scalable formulation: key core points by their ε-grid cell, tag
+    each probe row with a row id, explode it to its 3×3 candidate cell
+    ring, left-join on the cell key (shuffle hash join — no cross join),
+    then one aggregate per row id keeps the nearest core within ε (ties:
+    smallest cluster). Every probe comes back exactly once with its own
+    columns, whatever values (nulls included) they hold; a probe with a
+    non-finite coordinate is noise. ``model`` is the output of
+    :func:`dbscan`.
 
     With ``features_col`` (same contract as :func:`dbscan`: x/y are the
     first two vector components), the exact distance filter runs over the
@@ -363,8 +363,6 @@ def predict(
     correct because a projection distance never exceeds the full distance,
     so the ring is a superset of the true n-D ε-neighborhood.
     """
-    from pyspark.sql.window import Window
-
     core_cols = [
         F.col(x_col).alias("core_x"),
         F.col(y_col).alias("core_y"),
@@ -376,7 +374,8 @@ def predict(
         core_cols.append(F.col(features_col).alias("core_feats"))
     cores = model.filter(F.col("flag") == "core").select(*core_cols)
     probes = (
-        new_points.withColumn("_cx", F.floor(F.col(x_col) / eps).cast("long"))
+        new_points.withColumn(_RID, F.monotonically_increasing_id())
+        .withColumn("_cx", F.floor(F.col(x_col) / eps).cast("long"))
         .withColumn("_cy", F.floor(F.col(y_col) / eps).cast("long"))
         .withColumn("_ox", F.expr("explode(array(-1L, 0L, 1L))"))
         .withColumn("_oy", F.expr("explode(array(-1L, 0L, 1L))"))
@@ -398,28 +397,26 @@ def predict(
         dy = F.col(y_col) - F.col("core_y")
         dist2 = dx * dx + dy * dy
 
-    # inner join + ε filter first, THEN left-join the winners back onto the
-    # probes: a probe whose candidate cells all hold cores beyond ε must
-    # still surface as noise (a pure left-join-then-filter would drop it).
-    best = (
-        probes.join(cores, ["cell_x", "cell_y"])
-        .withColumn("_d2", dist2)
-        .filter(F.col("_d2") <= eps * eps)
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(*new_points.columns).orderBy(
-                    F.col("_d2").asc(), F.col("core_cluster").asc()
-                )
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .select(*new_points.columns, "core_cluster")
+    # the left join keeps every probe, even one whose candidate cells hold
+    # no core or only cores beyond ε; min() skips the null non-hits. The
+    # aggregate stays in the lineage of ONE evaluation of the row id, so
+    # ids never have to agree across two scans of ``new_points``.
+    hit = F.when(
+        dist2 <= eps * eps,
+        F.struct(dist2.alias("d2"), F.col("core_cluster").alias("c")),
     )
-    return new_points.join(best, new_points.columns, "left").select(
-        *new_points.columns,
-        F.coalesce(F.col("core_cluster"), F.lit(0)).alias("cluster"),
-        F.when(F.col("core_cluster").isNotNull(), F.lit("border"))
+    best = (
+        probes.join(cores, ["cell_x", "cell_y"], "left")
+        .groupBy(_RID)
+        .agg(
+            F.min(hit).alias("_hit"),
+            F.any_value(F.struct(*new_points.columns)).alias("_row"),
+        )
+    )
+    return best.select(
+        "_row.*",
+        F.coalesce(F.col("_hit.c"), F.lit(0)).alias("cluster"),
+        F.when(F.col("_hit").isNotNull(), F.lit("border"))
         .otherwise(F.lit("noise"))
         .alias("flag"),
     )

@@ -244,3 +244,91 @@ def test_predict_surrounded_but_out_of_range(spark):
     rows = predict(model, probe, eps=eps).collect()
     assert len(rows) == 1
     assert rows[0]["cluster"] == 0 and rows[0]["flag"] == "noise"
+
+
+def test_result_is_partition_invariant(spark):
+    """Every row comes back exactly once with its own payload at any
+    max_points_per_partition — duplicate coordinates in the margin zone
+    must not collapse into one row — and the clustering does not depend
+    on the partitioning beyond relabelling. 400 random points plus two
+    duplicate pairs, each pair's rows with different ids and names: one
+    at (5, 5), one at (0, 1) on the x = 0 line where the cap-50 BSP splits
+    two partitions."""
+    rng = np.random.default_rng(5)
+    pts = rng.uniform(-6, 6, size=(400, 2))
+    rows = [(i, float(x), float(y), f"p{i}") for i, (x, y) in enumerate(pts)]
+    rows += [
+        (400, 5.0, 5.0, "dup-a"),
+        (401, 5.0, 5.0, "dup-b"),
+        (402, 0.0, 1.0, "edge-a"),
+        (403, 0.0, 1.0, "edge-b"),
+    ]
+    df = spark.createDataFrame(rows, "id long, x double, y double, name string")
+    want = {r["id"]: r["name"] for r in df.collect()}
+    by_cap = {}
+    for cap in (50, 10000):
+        rows = dbscan(df, eps=0.25, min_points=3, max_points_per_partition=cap).collect()
+        assert len(rows) == len(want), cap
+        assert {r["id"]: r["name"] for r in rows} == want, cap
+        by_cap[cap] = sorted(rows, key=lambda r: r["id"])
+    small, whole = by_cap[50], by_cap[10000]
+    assert [r["flag"] for r in small] == [r["flag"] for r in whole]
+    ok, _ = relabel_to_match(
+        np.array([r["cluster"] for r in small]),
+        np.array([r["cluster"] for r in whole]),
+    )
+    assert ok
+
+
+def test_predict_ignores_null_payload(spark):
+    """Two probes at the same coordinates, one with a null payload column:
+    both come back once, with the same cluster."""
+    model = spark.createDataFrame(
+        [(0.0, 0.0, 7, "core"), (0.1, 0.0, 7, "core")],
+        "x double, y double, cluster long, flag string",
+    )
+    probes = spark.createDataFrame(
+        [(1, 0.05, 0.0, "a"), (2, 0.05, 0.0, None)],
+        "nid long, x double, y double, tag string",
+    )
+    rows = predict(model, probes, eps=0.3).collect()
+    assert sorted(r["nid"] for r in rows) == [1, 2]
+    assert {r["nid"]: r["tag"] for r in rows} == {1: "a", 2: None}
+    assert all(r["cluster"] == 7 and r["flag"] == "border" for r in rows)
+
+
+@pytest.mark.parametrize(
+    "eps,min_points",
+    [(0.0, 3), (-1.0, 3), (float("nan"), 3), (float("inf"), 3), (0.5, 0)],
+)
+def test_invalid_parameters_raise_before_spark(spark, eps, min_points):
+    df = spark.createDataFrame([(0, 0.0, 0.0)], "id long, x double, y double")
+    with pytest.raises(ValueError):
+        dbscan(df, eps=eps, min_points=min_points)
+
+
+def test_non_finite_coordinates_are_noise(spark):
+    """null / NaN / ±inf coordinates: each such row comes back exactly once
+    as noise with its own payload, and the finite rows cluster as if they
+    were alone."""
+    nan, inf = float("nan"), float("inf")
+    finite = [(i, 0.1 * i, 0.0, f"f{i}") for i in range(6)]
+    hostile = [
+        (10, None, 0.0, "null-x"),
+        (11, 0.0, None, "null-y"),
+        (12, nan, 0.0, "nan-x"),
+        (13, 0.0, nan, "nan-y"),
+        (14, inf, 0.0, "inf-x"),
+        (15, 0.0, -inf, "ninf-y"),
+    ]
+    df = spark.createDataFrame(
+        finite + hostile, "id long, x double, y double, tag string"
+    )
+    rows = dbscan(df, eps=0.15, min_points=2, max_points_per_partition=3).collect()
+    by_id = {r["id"]: r for r in rows}
+    assert len(rows) == len(finite) + len(hostile) == len(by_id)
+    for i, _x, _y, tag in hostile:
+        assert by_id[i]["tag"] == tag
+        assert by_id[i]["cluster"] == 0 and by_id[i]["flag"] == "noise"
+    assert len({by_id[i]["cluster"] for i, *_ in finite}) == 1
+    assert all(by_id[i]["flag"] == "core" for i, *_ in finite)

@@ -735,9 +735,24 @@ def test_kmeans_assignment_is_zero_shuffle_map(spark):
 def test_dbscan_flags_projection_reuses_pipeline(spark):
     """dbscan_flags is a projection over the clustered result — it must
     not re-run a second containment join on the full input (one
-    broadcast rect join feeding the kernel, as in the base pipeline)."""
+    broadcast rect join feeding the kernel, as in the base pipeline).
+    The formatted plan repeats that join (initial/final and cached
+    sub-plans), so the guard is on its condition: every
+    BroadcastNestedLoopJoin must be the same outer-box containment test —
+    the merge is keyed on the row id, not on a second rect join."""
     plan = plan_of(spark, "dbscan_flags")
     assert "CartesianProduct" not in plan
+    conds = {
+        re.sub(r"#\d+", "", c)
+        for c in re.findall(
+            r"\) BroadcastNestedLoopJoin[^\n]*\nJoin type: [^\n]*\n"
+            r"Join condition: ([^\n]*)",
+            plan,
+        )
+    }
+    assert len(conds) == 1, conds
+    (cond,) = conds
+    assert all(f"{c} >= o{c}" in cond and f"{c} <= o{c}2" in cond for c in "xy")
 
 
 def test_ohlc_is_single_aggregation_no_window(spark):
