@@ -71,6 +71,14 @@ def _rects_df(spark, margin_list):
     )
 
 
+def _checked_eps(eps: float, caller: str) -> float:
+    """``eps`` as a Python float; ``ValueError`` unless finite and > 0."""
+    eps = float(eps)  # a numpy scalar would poison createDataFrame in dbscan()
+    if not (math.isfinite(eps) and eps > 0):
+        raise ValueError(f"{caller}: eps must be finite and > 0, got {eps!r}")
+    return eps
+
+
 def dbscan(
     df: DataFrame,
     eps: float,
@@ -123,10 +131,8 @@ def dbscan(
     ``DBSCANModel.unpersist()``) when done, or a loop of dbscan() calls
     accumulates one cached result per call until LRU eviction.
     """
-    eps = float(eps)  # numpy scalars would poison createDataFrame below
+    eps = _checked_eps(eps, "dbscan")
     min_points = int(min_points)
-    if not (math.isfinite(eps) and eps > 0):
-        raise ValueError(f"dbscan: eps must be finite and > 0, got {eps!r}")
     if min_points < 1:
         raise ValueError(f"dbscan: min_points must be >= 1, got {min_points}")
     spark = df.sparkSession
@@ -362,7 +368,11 @@ def predict(
     FULL vector while candidate generation stays on the (x, y) cell ring —
     correct because a projection distance never exceeds the full distance,
     so the ring is a superset of the true n-D ε-neighborhood.
+
+    ``eps`` must be finite and > 0, as for :func:`dbscan`; anything else
+    raises ``ValueError`` before any Spark job runs.
     """
+    eps = _checked_eps(eps, "predict")
     core_cols = [
         F.col(x_col).alias("core_x"),
         F.col(y_col).alias("core_y"),

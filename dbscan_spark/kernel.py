@@ -20,110 +20,116 @@ Semantics contract (mirrors the reference, SURVEY.md §2.3):
   order); callers must compare results permutation-invariantly.
 * P9 — noise keeps ``cluster = 0`` and ``flag = 'noise'``.
 
-Complexity: neighbor lists are built via an eps-sized grid index
-(bucket a point, probe its 3×3 cell ring, exact-filter) → O(n · avg
-neighborhood) instead of the reference kernel's O(n²) linear scans
-(LocalDBSCANNaive.scala:70-75). For tiny inputs a dense pairwise matrix is
-cheaper than the index; we switch on size.
+Complexity: one pass builds every closed ε-neighbourhood as a CSR
+(``indptr``/``indices``). Points are put in ε-cell order once (a
+``lexsort`` on the cells of the first two dims), so each cell's members
+are a contiguous run and its 3×3 cell ring is at most three runs; a
+blocked members × ring distance matrix per cell then emits the neighbour
+ids already grouped by row → O(n · avg neighbourhood) work instead of the
+reference kernel's O(n²) linear scans (LocalDBSCANNaive.scala:70-75).
+Inputs of at most ``_DENSE_CUTOFF`` points run the same loop as one
+all-pairs block. Labelling is array-only: a point is core when its degree
+reaches ``min_points``; core–core components come from min-label
+propagation over the CSR (``np.minimum.reduceat``) with root hooking and
+pointer jumping, each component ending up labelled by its smallest
+original core index. That index is the seed that discovers the component
+in the reference's sequential expansion: it visits seeds in index order
+and a cluster's expansion only ever reaches its own component's cores, so
+numbering components by their smallest core index reproduces discovery
+order (P3). Clusters are expanded one after another there, so a border
+point keeps the first — smallest — cluster among its core neighbours
+(P2).
 """
 
 from __future__ import annotations
 
-from collections import deque
-
 import numpy as np
 
-NOISE = 0
 FLAG_NOISE = "noise"
 FLAG_CORE = "core"
 FLAG_BORDER = "border"
 
-_DENSE_CUTOFF = 2048  # below this, an n×n distance matrix is fastest
+_DENSE_CUTOFF = 2048  # up to this many points, one all-pairs block
+_BLOCK = 1 << 22  # doubles per distance block (32 MB)
+_FLAGS = np.array([FLAG_NOISE, FLAG_CORE, FLAG_BORDER], dtype=object)
 
 
-def _neighbor_lists_dense_nd(X: np.ndarray, eps: float) -> list[np.ndarray]:
-    """All-pairs n-D neighborhoods via explicit coordinate differences.
-
-    Deliberately NOT the |a|²+|b|²−2ab dot-product trick: the closed-ball
-    boundary (P1, dist² <= eps²) must not flip on the ~1e-12 rounding that
-    formulation introduces for points exactly at distance eps.
-    """
-    sq = np.zeros((len(X), len(X)), dtype=np.float64)
-    for d in range(X.shape[1]):
-        diff = X[:, d][:, None] - X[:, d][None, :]
-        sq += diff * diff
-    within = sq <= eps * eps
-    return [np.flatnonzero(row) for row in within]
-
-
-def _neighbor_lists_grid_nd(X: np.ndarray, eps: float) -> list[np.ndarray]:
-    """n-D neighborhoods via an eps-cell grid on the FIRST TWO dims.
+def _cell_runs(X: np.ndarray, eps: float) -> tuple[np.ndarray, list]:
+    """ε-cell order on the FIRST TWO dims, and per cell ``(start, end,
+    ring)``: the cell's run of positions in that order and the runs
+    (at most three) holding its 3×3 cell ring.
 
     Correct for any dimensionality because a Euclidean projection distance
     never exceeds the full distance: every point within full-space eps of p
     is within eps of p in the (d0, d1) plane, hence inside p's 3×3 cell
-    ring. Candidates are exact-filtered on the full distance. (Selectivity
-    degrades if the first two dims carry no spread — the same trade the
-    reference makes by partitioning on vector(0), vector(1).)
+    ring. (Selectivity degrades if the first two dims carry no spread — the
+    same trade the reference makes by partitioning on vector(0),
+    vector(1).) Cells sort by (cx, cy), so the three cells of one ring
+    column, (cx+o, cy-1..cy+1), are adjacent in the order and form one run.
     """
     n = len(X)
     cx = np.floor(X[:, 0] / eps).astype(np.int64)
     cy = np.floor(X[:, 1] / eps).astype(np.int64)
-    # Group point indices by cell: lexsort is stable, so each cell's
-    # member array is in ascending original-index order (same candidate
-    # ordering the per-point dict build produced).
     order = np.lexsort((cy, cx))
     sx, sy = cx[order], cy[order]
-    if n:
-        change = np.flatnonzero((np.diff(sx) != 0) | (np.diff(sy) != 0)) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [n]))
+    change = np.flatnonzero((np.diff(sx) != 0) | (np.diff(sy) != 0)) + 1
+    starts = np.concatenate(([0], change)).tolist()
+    ends = np.concatenate((change, [n])).tolist()
+    run = dict(zip(zip(sx[starts].tolist(), sy[starts].tolist()), zip(starts, ends)))
+    cells = []
+    for (x, y), (s, e) in run.items():
+        ring = []
+        for rx in (x - 1, x, x + 1):
+            col = [run[k] for k in ((rx, y - 1), (rx, y), (rx, y + 1)) if k in run]
+            if col:
+                ring.append((col[0][0], col[-1][1]))
+        cells.append((s, e, ring))
+    return order, cells
+
+
+def _neighbor_csr(
+    X: np.ndarray, eps: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every closed ε-neighbourhood as one CSR: ``(order, indptr,
+    indices)``, where row ``r`` is point ``order[r]`` and holds the
+    original indices ``indices[indptr[r]:indptr[r + 1]]``.
+
+    Distances are explicit coordinate differences, deliberately NOT the
+    |a|²+|b|²−2ab dot-product trick: the closed-ball boundary (P1,
+    dist² <= eps²) must not flip on the ~1e-12 rounding that formulation
+    introduces for points exactly at distance eps.
+    """
+    n = len(X)
+    if n <= _DENSE_CUTOFF:
+        order, cells = np.arange(n), [(0, n, [(0, n)])] if n else []
     else:
-        starts = ends = np.empty(0, dtype=np.int64)
-    cells = {
-        (sx[s], sy[s]): order[s:e] for s, e in zip(starts, ends)
-    }
+        order, cells = _cell_runs(X, eps)
+    Xs = X[order]
     eps2 = eps * eps
-    out: list[np.ndarray] = [None] * n  # type: ignore[list-item]
-    for (bx, by), members in cells.items():
-        # Every member of a cell shares the same 3×3 candidate ring, so
-        # the ring is gathered once per CELL and distances computed as a
-        # blocked members × candidates matrix — the Python interpreter
-        # runs per cell, not per point (the round-1 hot-cell cost).
-        ring = [
-            cells.get((bx + ox, by + oy))
-            for ox in (-1, 0, 1)
-            for oy in (-1, 0, 1)
-        ]
-        cand = np.concatenate([c for c in ring if c is not None])
-        Xc = X[cand]
-        if len(members) == 1:
-            # Sparse layout (~1 point/cell): skip the blocked-matrix
-            # machinery; same explicit coordinate-difference arithmetic.
-            i = members[0]
-            sq1 = ((Xc - X[i]) ** 2).sum(axis=1)
-            out[i] = cand[sq1 <= eps2]
-            continue
-        # Block the member rows so the matrix stays ~32M doubles even when
+    counts = np.zeros(n, dtype=np.int64)
+    hits = [np.empty(0, dtype=np.int64)]
+    for start, end, ring in cells:
+        cand = np.concatenate([order[a:b] for a, b in ring])
+        Xc = np.concatenate([Xs[a:b] for a, b in ring])
+        # Block the member rows so the matrix stays ~4M doubles even when
         # an unsplittable hot cell holds the whole partition (P8).
-        block = max(1, (1 << 22) // max(len(cand), 1))
-        for s in range(0, len(members), block):
-            mb = members[s : s + block]
-            Xm = X[mb]
-            sq = np.zeros((len(mb), len(cand)), dtype=np.float64)
-            for d in range(X.shape[1]):
-                diff = Xm[:, d][:, None] - Xc[:, d][None, :]
-                sq += diff * diff
+        block = max(1, _BLOCK // len(cand))
+        for s in range(start, end, block):
+            e = min(end, s + block)
+            sq = np.subtract.outer(Xs[s:e, 0], Xc[:, 0])
+            sq *= sq
+            for d in range(1, X.shape[1]):
+                diff = np.subtract.outer(Xs[s:e, d], Xc[:, d])
+                diff *= diff
+                sq += diff
             within = sq <= eps2
-            # One row-major nonzero + split instead of a boolean mask per
-            # row: np.nonzero groups hits by row in order, so splitting the
-            # gathered candidate ids at the per-row counts yields each
-            # member's neighbor list without per-point interpreter work.
-            flat = cand[np.nonzero(within)[1]]
-            offsets = np.cumsum(within.sum(axis=1))[:-1]
-            for i, part in zip(mb, np.split(flat, offsets)):
-                out[i] = part
-    return out
+            # Row-major hits: the members are consecutive rows, so the
+            # gathered ids land in row order with no sort of the edges.
+            hits.append(cand[np.flatnonzero(within) % len(cand)])
+            counts[s:e] = np.count_nonzero(within, axis=1)
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(counts, out=indptr[1:])
+    return order, indptr, np.concatenate(hits)
 
 
 def local_dbscan_matrix(
@@ -142,43 +148,46 @@ def local_dbscan_matrix(
     if X.ndim != 2:
         raise ValueError(f"X must be (n, d), got shape {X.shape}")
     n = len(X)
-    cluster = np.zeros(n, dtype=np.int64)
-    flag = np.full(n, FLAG_NOISE, dtype=object)
-    if n == 0:
-        return cluster, flag
+    order, indptr, indices = _neighbor_csr(X, eps)
+    deg = np.diff(indptr)
+    core = deg >= min_points  # by row
+    core_ids = order[core]
 
-    if n <= _DENSE_CUTOFF:
-        neighbors = _neighbor_lists_dense_nd(X, eps)
-    else:
-        neighbors = _neighbor_lists_grid_nd(X, eps)
+    # lab[i]: smallest core index known to share core i's component; n for
+    # a non-core point and at the sentinel slot lab[n], so non-cores never
+    # win a min and pointer jumping stays in bounds.
+    lab = np.full(n + 1, n, dtype=np.int64)
+    lab[core_ids] = core_ids
+    rows = np.flatnonzero(deg)
+    while True:
+        # m[r]: smallest label among row r's neighbours (n if none is core)
+        m = np.full(n, n, dtype=np.int64)
+        m[rows] = np.minimum.reduceat(lab[indices], indptr[rows])
+        m_core = np.minimum(m[core], lab[core_ids])
+        if np.array_equal(m_core, lab[core_ids]):
+            break
+        # Hook each core's current root under the smaller label too: plain
+        # propagation needs O(n) rounds on a chain in random index order.
+        np.minimum.at(lab, lab[core_ids], m_core)
+        lab[core_ids] = np.minimum(lab[core_ids], m_core)
+        while True:
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
 
-    visited = np.zeros(n, dtype=bool)
-    next_cluster = 0
-    for seed in range(n):
-        if visited[seed]:
-            continue
-        visited[seed] = True
-        seed_nbrs = neighbors[seed]
-        if len(seed_nbrs) < min_points:
-            continue  # stays noise unless a later cluster adopts it (P2)
-        next_cluster += 1
-        cluster[seed] = next_cluster
-        flag[seed] = FLAG_CORE
-        queue: deque[int] = deque(seed_nbrs.tolist())
-        while queue:
-            j = queue.popleft()
-            if not visited[j]:
-                visited[j] = True
-                j_nbrs = neighbors[j]
-                if len(j_nbrs) >= min_points:
-                    flag[j] = FLAG_CORE
-                    queue.extend(j_nbrs.tolist())
-            if cluster[j] == NOISE:
-                # Outside the !visited guard: reclaims visited noise as
-                # border (P2, LocalDBSCANArchery.scala:103-106).
-                cluster[j] = next_cluster
-                if flag[j] != FLAG_CORE:
-                    flag[j] = FLAG_BORDER
+    # At the fixpoint a core's label is its component's smallest core index
+    # and a non-core row's m is the smallest such index among its core
+    # neighbours; numbering the components by that index gives both the
+    # cluster ids (P3) and each border point's pick (P2).
+    key = np.where(core, lab[order], m)  # by row
+    cid = np.zeros(n + 1, dtype=np.int64)
+    roots = np.flatnonzero(lab[:n] == np.arange(n))
+    cid[roots] = np.arange(1, len(roots) + 1)
+    cluster = np.empty(n, dtype=np.int64)
+    flag = np.empty(n, dtype=object)
+    cluster[order] = cid[key]
+    flag[order] = _FLAGS[np.where(core, 1, np.where(key < n, 2, 0))]
     return cluster, flag
 
 

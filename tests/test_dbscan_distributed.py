@@ -305,6 +305,12 @@ def test_invalid_parameters_raise_before_spark(spark, eps, min_points):
     df = spark.createDataFrame([(0, 0.0, 0.0)], "id long, x double, y double")
     with pytest.raises(ValueError):
         dbscan(df, eps=eps, min_points=min_points)
+    if min_points >= 1:  # eps is the bad parameter: predict() refuses it too
+        model = spark.createDataFrame(
+            [(0.0, 0.0, 1, "core")], "x double, y double, cluster long, flag string"
+        )
+        with pytest.raises(ValueError):
+            predict(model, df, eps=eps)
 
 
 def test_non_finite_coordinates_are_noise(spark):
