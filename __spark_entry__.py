@@ -183,8 +183,10 @@ _PRIORITY = [
 # their last driver grade; the value is the last round whose grades
 # are stale. A graded entry n with graded_round <= _REGRADE[n] jumps
 # to the head of the green block so the driver re-certifies the new
-# code; it falls back into the normal stalest-first rotation
-# automatically once a newer grade lands.
+# code. Once a newer grade lands the entry sorts like any other graded
+# query, but it has expired and must still be PRUNED at round open:
+# tests/test_entry_order.py::test_rotation_invariants_with_current_history
+# fails on (and names) every expired entry left in this dict.
 _REGRADE = {
     # (All 27 round-14 bumps — the multimodal phash trio, the r14
     # optimization-pass cohort (shingle consumers, vote-fold family,
@@ -194,78 +196,13 @@ _REGRADE = {
     # round-15 open; manifest re-baselined via
     # tools/query_hashes.py --write.)
     #
-    # round 15 (VERDICT r14 #1): the standalone language vote restored
-    # to the five-filter formulation (_lang_counts_filters) — the r14
-    # single-pass fold was slower where the expression runs once per
-    # row; value-identical (collect-compared at sf0.1) and re-verified
-    # vs the DuckDB oracle at sf0.001 + sf0.01 before commit:
-    "text_language_id": 14,
-    "text_language_confusion": 14,
-    # corpus_ccnet_pipeline inherits _lang_vote (its LM-perplexity
-    # language gate) — value-identical, oracle re-verified at
-    # sf0.001 + sf0.01:
-    "corpus_ccnet_pipeline": 14,
-    # round 15 (VERDICT r14 #2, json mirror): the events JSON mirror is
-    # written at the source's natural split structure again (the r14
-    # 32-file rebalance reverted) — rows identical, layout changed;
-    # both consumers re-verified at sf0.001 + sf0.01:
-    "json_source_events": 14,
-    "json_corrupt_tolerant_read": 14,
-    # round 15 (VERDICT r14 #2): MinHash signatures computed row-locally
-    # over the per-key shingle-hash arrays (_sig_from_hash_arrays) —
-    # explode + 64-slot hash-aggregate dropped for both the document-
-    # and paragraph-level pipelines; signatures bit-identical
-    # (collect-compared), every consumer re-verified vs the DuckDB
-    # oracle at sf0.001 + sf0.01 before commit:
-    "dedup_minhash_lsh": 14,
-    "dedup_cluster_cc": 14,
-    "dedup_keep_best": 14,
-    "corpus_split_leakage": 14,
-    "dedup_semantic_keep_best": 14,
-    "corpus_paragraph_neardup": 14,
-    "corpus_paragraph_clean": 14,
-    "corpus_paragraph_dedup": 14,
-    "corpus_published_clean": 14,
-    # round 15 (VERDICT r14 #4): the four k-gram count tables now come
-    # from ONE GROUPING SETS aggregation over the event stream (one
-    # scan + one checkpoint instead of four); tables verified
-    # bit-identical at sf0.01, all four consumers re-verified vs the
-    # DuckDB oracle at sf0.001 + sf0.01 (corpus_ccnet_pipeline bump
-    # above already covers it):
-    "text_5gram_kn_quality": 14,
-    "text_5gram_kn_pruned": 14,
-    "corpus_ccnet_buckets_kn5": 14,
-    # round 15 (VERDICT r14 #6): the deterministic quantizer driver
-    # sample is collected once and shared within composing queries
-    # (_driver_sample); ann_recall_eval shares one corpus projection +
-    # one coarse-quantizer build across its three index families, the
-    # IVFPQ train half and the add-batch/compaction/streaming paths
-    # collect their sample once instead of twice. Artifacts are
-    # bit-identical (pure functions of the same sample); all 12
-    # affected queries re-verified vs the DuckDB oracle at
-    # sf0.001 + sf0.01, recall pins green:
-    "ann_topk_ivf": 14,
-    "ann_topk_pq": 14,
-    "ann_topk_pq_deep": 14,
-    "ann_topk_ivfpq": 14,
-    "ann_topk_ivfpq_persisted": 14,
-    "ann_topk_ivfpq_tombstoned": 14,
-    "ann_index_add_batch": 14,
-    "ann_index_compaction_stats": 14,
-    "ann_index_rebuild_compacted": 14,
-    "ann_recall_eval": 14,
-    "streaming_ann_index_serve": 14,
-    "streaming_ann_index_maintenance": 14,
-    # round 15 (r14 advisor brief, low #2): _qcls_train now parses the
-    # saved shuffle-partitions conf defensively (ValueError →
-    # defaultParallelism) — value-identical on any numeric conf (this
-    # harness always is); all four classifier consumers re-verified vs
-    # the DuckDB oracle at sf0.001 + sf0.01 before commit
-    # (corpus_ccnet_pipeline bump above already covers the fifth):
-    "text_quality_classifier_train": 14,
-    "text_quality_classifier_scores": 14,
-    "corpus_quality_classifier_buckets": 14,
-    "streaming_corpus_quality_gate": 14,
+    # (All 33 round-14 bumps — the language-vote trio, the JSON mirror
+    # pair, the nine MinHash consumers, the three KN5 tables, the
+    # twelve ANN/IVF-PQ queries and the four classifier consumers —
+    # were ALL re-graded clean in CORRECTNESS_r15 (50/50) and pruned
+    # at round-16 open; manifest re-baselined via
+    # tools/query_hashes.py --write.)
+    #
     # dbscan() merges margin copies on a row id instead of coordinate
     # values, and predict() picks each probe's nearest core with one
     # aggregate per probe row id (no window, no join-back); all eight

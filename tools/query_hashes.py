@@ -49,9 +49,12 @@ helper, or an oracle:
 3. leave the manifest alone — it keeps the fingerprint the grade
    certified.
 At the START of each round (right after the new CORRECTNESS_r*.json
-lands, BEFORE touching query code), run
-`python tools/query_hashes.py --write` so freshly re-graded queries
-re-baseline to the pair the driver just certified.
+lands, BEFORE touching query code):
+1. run `python tools/query_hashes.py --write` so freshly re-graded
+   queries re-baseline to the pair the driver just certified;
+2. prune expired `_REGRADE` entries (the test names them:
+   test_rotation_invariants_with_current_history lists every bump
+   whose query has a grade newer than its value).
 """
 
 from __future__ import annotations
