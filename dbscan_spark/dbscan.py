@@ -14,10 +14,15 @@ DataFrame operators so Catalyst plans every distributed step:
                            margins are intentionally duplicated (reference
                            O8, DBSCAN.scala:108-112). BroadcastNestedLoopJoin
                            on a table of ≤ thousands of rows.
-4. local clustering      — ``repartition('pid').groupBy('pid')
+4. local clustering      — the boxes are packed longest-first onto
+                           ``slots = min(#boxes, defaultParallelism)`` tasks
+                           (partitioner.pack_slots; MR-DBSCAN's cost-based
+                           balance applied at the task grain), then
+                           ``repartitionById(slots, slot).groupBy(slot, pid)
                            .applyInPandas(kernel)`` — Arrow-batched numpy
                            DBSCAN per spatial partition, group size bounded
-                           by ``max_points_per_partition`` (reference O9-O10).
+                           by ``max_points_per_partition`` (reference O9-O10,
+                           whose ``groupByKey`` runs one task per box).
 5. merge                 — every input row carries a row id from just
                            before step 3, through the kernel. Margin copies
                            (tagged by the kernel against their own
@@ -39,36 +44,70 @@ Scale notes (100 TB thinking):
   the reference; raise ``minimum_rectangle_size`` (i.e. eps) or pre-filter
   if the cell histogram itself would explode.
 * The only shuffles are the histogram aggregate (partial+final combine),
-  the per-partition repartition for the kernel, and the margin ``groupBy``
-  on the row id; the rectangle and global-id tables are always broadcast.
-* AQE handles residual skew in the kernel shuffle; the BSP bound
-  ``max_points_per_partition`` is the primary skew control, exactly as in
-  the reference (best-effort under unsplittable hot cells, P8).
+  the slot repartition for the kernel, and the margin repartition on the
+  row id that both ``groupBy`` aggregates by row id keep; the rectangle
+  and global-id tables are always broadcast, built from pandas so Arrow
+  ships them to the JVM without a Python job.
+* The kernel and margin shuffles are sized from ``slots``, not from
+  ``spark.sql.shuffle.partitions``: each is the last shuffle of a
+  persisted plan, and with
+  ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` off
+  (Spark's default) AQE leaves that shuffle's partitions as planned — no
+  coalescing, no skew split — so an unsized one runs one task per shuffle
+  partition. Skew is handled by the BSP bound ``max_points_per_partition``,
+  exactly as in the reference (best-effort under unsplittable hot cells,
+  P8), and then by the longest-first packing of the boxes onto the slots.
+* ``repartitionById`` needs PySpark >= 4.1.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from dbscan_spark.graph import assign_global_ids
 from dbscan_spark.kernel import local_dbscan_matrix
-from dbscan_spark.partitioner import find_partitions, margins
+from dbscan_spark.partitioner import find_partitions, margins, pack_slots
 
 _RID = "__dbscan_rid"  # internal row id; never part of a returned frame
+_SLOT = "__dbscan_slot"  # kernel task of a box; never part of a returned frame
 
 
-def _rects_df(spark, margin_list):
-    """Broadcast-able table of (pid, outer) rectangle bounds."""
-    rows = [
-        (pid, outer.x, outer.y, outer.x2, outer.y2)
-        for pid, _inner, _main, outer in margin_list
-    ]
-    return spark.createDataFrame(
-        rows, "pid int, ox double, oy double, ox2 double, oy2 double"
+def _rects_df(spark, margin_list, slots):
+    """Broadcast-able table of (pid, slot, outer) rectangle bounds, each box
+    packed onto one of ``slots`` kernel tasks by its point count.
+
+    Built as a pandas frame whose dtypes already match the schema: with
+    Arrow on, it reaches the JVM with no Python job and no Arrow cast (a
+    cast raised the driver's peak RSS by ~1 MB when measured)."""
+    outer = [o for _pid, _inner, _main, o in margin_list]
+    pdf = pd.DataFrame(
+        {
+            "pid": np.array([pid for pid, *_ in margin_list], dtype=np.int32),
+            _SLOT: np.array(
+                pack_slots([m.points for _p, _i, m, _o in margin_list], slots),
+                dtype=np.int32,
+            ),
+            "ox": [r.x for r in outer],
+            "oy": [r.y for r in outer],
+            "ox2": [r.x2 for r in outer],
+            "oy2": [r.y2 for r in outer],
+        }
     )
+    return spark.createDataFrame(
+        pdf, f"pid int, {_SLOT} int, ox double, oy double, ox2 double, oy2 double"
+    )
+
+
+def _materialized(result: DataFrame) -> DataFrame:
+    """``result`` persisted and computed once, as :func:`dbscan` returns it."""
+    result = result.persist()
+    result.count()
+    return result
 
 
 def _checked_eps(eps: float, caller: str) -> float:
@@ -154,15 +193,20 @@ def dbscan(
         .collect()
     )
     hist = {(r["cx"], r["cy"]): r["count"] for r in cell_rows}
-    if not hist:
-        return df.withColumn("cluster", F.lit(0).cast("long")).withColumn(
-            "flag", F.lit("noise")
-        )
+    noise = df.select(
+        *df.columns,
+        F.lit(0).cast("long").alias("cluster"),
+        F.lit("noise").alias("flag"),
+    )
+    if not hist:  # no row has finite coordinates: all noise
+        return _materialized(noise)
 
-    # -- 2. driver-side BSP + ε margins ------------------------------------
+    # -- 2. driver-side BSP + ε margins; boxes packed into ``slots`` tasks,
+    #       and every shuffle below is sized from the same count ---------
     parts = find_partitions(hist, max_points_per_partition, size)
     margin_list = margins(parts, eps)
-    rects = _rects_df(spark, margin_list)
+    slots = min(len(parts), spark.sparkContext.defaultParallelism)
+    rects = _rects_df(spark, margin_list, slots)
 
     # -- 3. assignment join: outer (ε-grown) containment, border-inclusive
     #       (P6: >= / <= for outer), duplicating margin points; every copy
@@ -175,7 +219,7 @@ def dbscan(
     assigned = (
         df.withColumn(_RID, F.monotonically_increasing_id())
         .join(F.broadcast(rects), in_outer)
-        .select("pid", _RID, *df.columns)
+        .select("pid", _SLOT, _RID, *df.columns)
     )
 
     # -- 4. per-partition numpy DBSCAN kernel ------------------------------
@@ -199,8 +243,6 @@ def dbscan(
         pid: (inner.x, inner.y, inner.x2, inner.y2)
         for pid, inner, _main, _outer in margin_list
     }
-
-    import numpy as np
 
     def _cluster_group(pdf):
         xs = pdf[x_col].to_numpy(dtype=np.float64)
@@ -236,9 +278,12 @@ def dbscan(
             out["in_margin"] = np.zeros(0, dtype=bool)
         return out
 
+    # Slot s is Spark partition s (``repartitionById``; a hash of the slot
+    # could land two slots in one task), and ``groupBy`` reuses that
+    # exchange. A group is still one box, so its size bound is unchanged.
     clustered = (
-        assigned.repartition(max(len(parts), 1), "pid")
-        .groupBy("pid")
+        assigned.repartitionById(slots, _SLOT)
+        .groupBy(_SLOT, "pid")
         .applyInPandas(_cluster_group, out_schema)
         .persist()
     )
@@ -249,7 +294,11 @@ def dbscan(
     #        (pid, cluster) copies by row id; the pair expansion is a
     #        per-row HOF over sets bounded by the number of rectangles
     #        overlapping one point (≤4 in the BSP grid) -------------------
-    margin = clustered.filter(F.col("in_margin"))
+    #    Both aggregates by row id below (here and in 6b) keep this
+    #    ``slots``-wide exchange: AQE does not coalesce the last shuffle of
+    #    a persisted plan (6b's), so an unsized one runs
+    #    spark.sql.shuffle.partitions tasks.
+    margin = clustered.filter(F.col("in_margin")).repartition(slots, _RID)
     per_point = (
         margin.filter(F.col("cluster") > 0)
         .groupBy(_RID)
@@ -286,8 +335,14 @@ def dbscan(
     gmap = assign_global_ids(
         local_ids, [((r.p1, r.c1), (r.p2, r.c2)) for r in edge_rows]
     )
-    gmap_df = spark.createDataFrame(
-        [(p, c, g) for (p, c), g in gmap.items()],
+    gmap_df = spark.createDataFrame(  # typed as in _rects_df, for the same reason
+        pd.DataFrame(
+            {
+                "pid": np.fromiter((p for p, _c in gmap), np.int32, len(gmap)),
+                "cluster": np.fromiter((c for _p, c in gmap), np.int64, len(gmap)),
+                "global_cluster": np.fromiter(gmap.values(), np.int64, len(gmap)),
+            }
+        ),
         "pid int, cluster long, global_cluster long",
     )
     gcluster = F.coalesce("global_cluster", F.lit(0))
@@ -323,20 +378,15 @@ def dbscan(
     )
 
     # -- 6c. rows with a non-finite coordinate: noise, payload untouched --
-    nonfinite = df.filter(~finite).select(
-        *df.columns,
-        F.lit(0).cast("long").alias("cluster"),
-        F.lit("noise").alias("flag"),
-    )
+    nonfinite = noise.filter(~finite)
 
     # -- 7. materialize the result, then release the kernel cache (it was
     #       only ever needed once more after the merge collect; the result
     #       keeps full lineage, so fault recovery recomputes rather than
     #       relying on unreliable checkpoint storage) --------------------
-    result = (
-        inner_final.unionByName(margin_final).unionByName(nonfinite).persist()
+    result = _materialized(
+        inner_final.unionByName(margin_final).unionByName(nonfinite)
     )
-    result.count()
     clustered.unpersist()
     return result
 

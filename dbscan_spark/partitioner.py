@@ -35,9 +35,10 @@ Behavioral contract:
 
 from __future__ import annotations
 
+import heapq
 import logging
 from collections import deque
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 log = logging.getLogger(__name__)
 
@@ -50,6 +51,9 @@ class Rectangle:
     y: float
     x2: float
     y2: float
+    # points the partitioner counted in the box (0 when not counted); a
+    # fact about the data, not part of the box's identity
+    points: int = field(default=0, compare=False)
 
     def contains_point(self, px: float, py: float) -> bool:
         """Border-inclusive (DBSCANRectangle.scala:34-36)."""
@@ -144,8 +148,9 @@ def find_partitions(
 ) -> list[Rectangle]:
     """BSP the bounding box of ``cells`` into ≤max-count partitions.
 
-    Returns non-empty partition rectangles in completion order. Mirrors
-    EvenSplitPartitioner.findPartitions (EvenSplitPartitioner.scala:44-93).
+    Returns non-empty partition rectangles in completion order, each with
+    its point count in ``points``. Mirrors EvenSplitPartitioner.findPartitions
+    (EvenSplitPartitioner.scala:44-93).
     """
     if not cells:
         return []
@@ -156,7 +161,7 @@ def find_partitions(
     bbox: _IBox = (min(xs), min(ys), max(xs) + 1, max(ys) + 1)
 
     remaining: deque[_IBox] = deque([bbox])
-    done: list[_IBox] = []
+    done: list[tuple[_IBox, int]] = []
     while remaining:
         box = remaining.popleft()
         by_x, by_y = _marginals(box, icells)
@@ -164,21 +169,39 @@ def find_partitions(
         if count == 0:
             continue  # drop empty partitions
         if count <= max_points_per_partition:
-            done.append(box)
+            done.append((box, count))
             continue
         if not _can_split(box):
             log.warning(
                 "unsplittable box %s holds %d > %d points; keeping (P8)",
                 box, count, max_points_per_partition,
             )
-            done.append(box)
+            done.append((box, count))
             continue
         target = count // 2  # integer division, EvenSplitPartitioner.scala:73
         half = _best_half(box, target, by_x, by_y)
         comp = _complement(half, box)
         remaining.appendleft(comp)
         remaining.appendleft(half)  # half processed first (reference :78)
-    return [Rectangle(x * size, y * size, x2 * size, y2 * size) for x, y, x2, y2 in done]
+    return [
+        Rectangle(x * size, y * size, x2 * size, y2 * size, count)
+        for (x, y, x2, y2), count in done
+    ]
+
+
+def pack_slots(weights: list[int], slots: int) -> list[int]:
+    """Longest-processing-time packing of boxes into ``slots`` tasks: the
+    slot in ``[0, slots)`` of each box, taking boxes heaviest first (ties
+    by box index) and each onto the least-loaded slot (ties by fewer boxes,
+    then lower slot). MR-DBSCAN's cost-based balance, at the task grain: no
+    two of the ``slots`` heaviest boxes share a slot."""
+    heap = [(0, 0, s) for s in range(slots)]
+    out = [0] * len(weights)
+    for i in sorted(range(len(weights)), key=lambda i: -weights[i]):
+        load, n, s = heapq.heappop(heap)
+        out[i] = s
+        heapq.heappush(heap, (load + weights[i], n + 1, s))
+    return out
 
 
 def margins(

@@ -338,3 +338,167 @@ def test_non_finite_coordinates_are_noise(spark):
         assert by_id[i]["cluster"] == 0 and by_id[i]["flag"] == "noise"
     assert len({by_id[i]["cluster"] for i, *_ in finite}) == 1
     assert all(by_id[i]["flag"] == "core" for i, *_ in finite)
+
+
+@pytest.mark.parametrize("kind", ["empty", "all-null"])
+def test_no_finite_input_is_materialized_noise(spark, kind):
+    """Empty input, and input whose every row lacks a finite coordinate,
+    come back like any other result: persisted and materialized, one
+    ``cluster=0, flag='noise'`` row per input row with its own payload."""
+    rows = [] if kind == "empty" else [
+        (1, None, 0.0, "a"), (2, float("nan"), None, "b"), (3, None, None, None)
+    ]
+    df = spark.createDataFrame(rows, "id long, x double, y double, tag string")
+    result = dbscan(df, eps=0.5, min_points=2)
+    assert result.is_cached
+    assert result.columns == df.columns + ["cluster", "flag"]
+    got = sorted(result.collect(), key=lambda r: r["id"])
+    assert [(r["id"], r["tag"]) for r in got] == [(i, t) for i, _x, _y, t in rows]
+    assert all(r["cluster"] == 0 and r["flag"] == "noise" for r in got)
+    result.unpersist()
+
+
+def _skewed_points(seed):
+    """Five hot blobs of unequal weight (each mostly inside one or two ε
+    cells) over a uniform background."""
+    rng = np.random.default_rng(seed)
+    sizes = (500, 260, 150, 90, 60)
+    centers = ((0.0, 0.0), (6.0, 1.0), (-5.0, 4.0), (3.0, -6.0), (-4.0, -5.0))
+    blobs = [np.asarray(c) + rng.normal(0, 0.15, size=(n, 2))
+             for c, n in zip(centers, sizes)]
+    return np.vstack(blobs + [rng.uniform(-8, 8, size=(200, 2))])
+
+
+def _box_count(pts, eps, cap):
+    """How many BSP boxes dbscan() cuts ``pts`` into at this cap."""
+    from dbscan_spark.partitioner import find_partitions
+
+    size = 2 * eps
+    hist = {}
+    for x, y in pts:
+        key = (np.floor(x / size) * size, np.floor(y / size) * size)
+        hist[key] = hist.get(key, 0) + 1
+    return len(find_partitions(hist, cap, size))
+
+
+def test_kernel_stage_runs_one_task_per_slot(spark, tmp_path, monkeypatch):
+    """The boxes are packed into ``slots = min(#boxes, defaultParallelism)``
+    kernel tasks: read through ``statusTracker()``, every stage that runs
+    the kernel runs exactly ``slots`` tasks, together they cover partitions
+    0..slots-1, and no stage of the fit runs more than 2 × slots plus the
+    input's partition count. The kernel is wrapped so each call leaves a
+    file naming its stage and partition."""
+    import os
+    import sys
+    import time
+
+    mod = sys.modules["dbscan_spark.dbscan"]  # the package attribute is the function
+    eps, cap = 0.3, 120
+    pts = _skewed_points(11)
+    n_boxes = _box_count(pts, eps, cap)
+    sc = spark.sparkContext
+    slots = min(n_boxes, sc.defaultParallelism)
+    assert n_boxes > slots or sc.defaultParallelism == 1, n_boxes
+
+    kernel, out = mod.local_dbscan_matrix, str(tmp_path)
+
+    def spy(X, eps, min_points):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"{ctx.stageId()}_{ctx.partitionId()}_{len(X)}_{os.getpid()}"
+        with open(os.path.join(out, name), "a"):
+            pass
+        return kernel(X, eps, min_points)
+
+    monkeypatch.setattr(mod, "local_dbscan_matrix", spy)
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "id long, x double, y double",
+    ).coalesce(3)
+    n_in = df.rdd.getNumPartitions()
+    group = f"kernel-slots-{os.getpid()}"
+    sc.setJobGroup(group, "dbscan kernel slot test")
+    try:
+        result = dbscan(df, eps, 5, max_points_per_partition=cap)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    result.unpersist()
+
+    calls = [tuple(map(int, f.split("_")[:2])) for f in os.listdir(out)]
+    kernel_stages = {s for s, _p in calls}
+    assert {p for _s, p in calls} == set(range(slots))
+    st = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:  # the listener bus posts stage status asynchronously
+        stages = {
+            sid: st.getStageInfo(sid)
+            for jid in st.getJobIdsForGroup(group)
+            for sid in st.getJobInfo(jid).stageIds
+        }
+        done = {sid: i for sid, i in stages.items() if i and i.numCompletedTasks}
+        if kernel_stages <= set(done) or time.time() > deadline:
+            break
+        time.sleep(0.2)
+    for sid in kernel_stages:
+        assert done[sid].numTasks == slots, (sid, done[sid].numTasks, slots)
+    bound = 2 * slots + n_in
+    assert max(i.numCompletedTasks for i in done.values()) <= bound, {
+        sid: i.numCompletedTasks for sid, i in done.items()
+    }
+
+
+@pytest.mark.parametrize("cap", [120, 5000])
+def test_skewed_result_is_partition_invariant(spark, cap):
+    """A multi-hot-box skewed input clusters like the local kernel both when
+    the boxes outnumber the cores (cap 120: several boxes share a kernel
+    task) and when they do not (cap 5000: one box per task, tasks to
+    spare)."""
+    eps, minp = 0.3, 5
+    pts = _skewed_points(12)
+    n_boxes = _box_count(pts, eps, cap)
+    dp = spark.sparkContext.defaultParallelism
+    if cap == 120:
+        assert n_boxes > dp, (n_boxes, dp)
+    elif not n_boxes < dp:
+        pytest.skip(f"{dp} cores leave no spare kernel task")
+    local_cluster, local_flag = local_dbscan(pts[:, 0], pts[:, 1], eps, minp)
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "id long, x double, y double",
+    )
+    rows = sorted(
+        dbscan(df, eps, minp, max_points_per_partition=cap).collect(),
+        key=lambda r: r["id"],
+    )
+    assert [r["id"] for r in rows] == list(range(len(pts)))
+    got = np.array([r["cluster"] for r in rows])
+    flags = np.array([r["flag"] for r in rows])
+    assert (flags == local_flag).all()
+    ok, _ = relabel_to_match(got, local_cluster)
+    assert ok
+
+
+def test_arrow_off_session_clusters_the_same(spark):
+    """The rectangle and global-id tables are built from pandas; with Arrow
+    off, createDataFrame takes its row-by-row path and the result is
+    unchanged."""
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    df = spark.createDataFrame(
+        [(i, 0.2 * (i % 10), 3.0 * (i // 10)) for i in range(40)],
+        "id long, x double, y double",
+    )
+
+    def labels():
+        rows = dbscan(df, eps=0.3, min_points=3, max_points_per_partition=8).collect()
+        return sorted((r["id"], r["cluster"], r["flag"]) for r in rows)
+
+    before = spark.conf.get(conf)
+    want = labels()
+    spark.conf.set(conf, "false")
+    try:
+        got = labels()
+    finally:
+        spark.conf.set(conf, before)
+    assert got == want
+    assert len({c for _i, c, _f in want}) == 4

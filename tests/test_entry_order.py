@@ -220,6 +220,22 @@ def test_no_stale_grades_without_regrade_bump():
     )
 
 
+def test_query_hashes_check_mode_agrees_with_tripwire():
+    """`python tools/query_hashes.py` (check mode) applies the same
+    pending-bump rule as the tripwire above, so on a tree that passes it
+    the CLI prints no query and exits 0."""
+    import subprocess
+    import sys
+
+    root = _repo_root()
+    proc = subprocess.run(
+        [sys.executable, "tools/query_hashes.py"],
+        cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, (proc.stdout, proc.stderr)
+    assert proc.stdout.strip().splitlines()[-1] == "[]", proc.stdout
+
+
 def test_manifest_refresh_cannot_absorb_unbumped_edit():
     """The round-6 escape scenario, pinned as a unit test: a graded
     query's code changes and `--write` runs in the same commit with NO

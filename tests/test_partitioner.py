@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from dbscan_spark.partitioner import Rectangle, find_partitions, margins
+from dbscan_spark.partitioner import Rectangle, find_partitions, margins, pack_slots
 
 
 def rect_set(parts):
@@ -177,6 +177,7 @@ def test_bsp_invariants_property(cells, size, maxp):
         )
         unsplittable = (r.x2 - r.x <= 2 * size) and (r.y2 - r.y <= 2 * size)
         assert c <= maxp or unsplittable, (r, c, maxp)
+        assert r.points == c, (r, c)
         covered += c
     assert covered == total
     for i, a in enumerate(parts):
@@ -184,3 +185,38 @@ def test_bsp_invariants_property(cells, size, maxp):
             assert (
                 a.x2 <= b.x or b.x2 <= a.x or a.y2 <= b.y or b.y2 <= a.y
             ), f"overlap {a} {b}"
+
+
+def test_rectangle_points_not_part_of_identity():
+    """The partitioner's point count rides on the box without changing
+    what the box is: equal bounds compare and hash equal."""
+    a, b = Rectangle(0.0, 0.0, 1.0, 1.0, 7), Rectangle(0.0, 0.0, 1.0, 1.0)
+    assert a == b and hash(a) == hash(b) and b.points == 0
+
+
+def test_pack_slots_longest_first():
+    """Hand-checked LPT run: 9 → slot 0, 7 → slot 1, 6 → slot 2, then each
+    next box onto the least-loaded slot (5 → 2, 4 → 1, 1 → 0)."""
+    assert pack_slots([6, 1, 9, 4, 7, 5], 3) == [2, 0, 0, 1, 1, 2]
+    assert pack_slots([], 4) == []
+    assert pack_slots([3, 3, 3], 1) == [0, 0, 0]
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    weights=st.lists(st.integers(min_value=0, max_value=5000), max_size=40),
+    slots=st.integers(min_value=1, max_value=8),
+)
+def test_pack_slots_property(weights, slots):
+    """Every box lands on a slot in [0, slots); the ``slots`` heaviest boxes
+    land on distinct slots; and no slot carries more than the heaviest box
+    on top of an even share (the LPT bound)."""
+    got = pack_slots(weights, slots)
+    assert len(got) == len(weights)
+    assert all(0 <= s < slots for s in got)
+    heaviest = sorted(range(len(weights)), key=lambda i: -weights[i])[:slots]
+    assert len({got[i] for i in heaviest}) == len(heaviest)
+    loads = [0] * slots
+    for w, s in zip(weights, got):
+        loads[s] += w
+    assert max(loads) <= sum(weights) / slots + max(weights, default=0)

@@ -41,6 +41,11 @@ component hashes the registered oracle SQL string. Remaining blind
 spot: helpers imported INSIDE a function body don't appear in module
 globals and are not traversed.
 
+Usage: `python tools/query_hashes.py` prints, as a JSON list, every query
+the companion test would flag (drift with no pending bump, or a name
+the manifest lacks or no longer registers) and exits 1 if there is any;
+`--write` runs the merge rule below and rewrites the manifest.
+
 Workflow when changing a registered query's implementation, a shared
 helper, or an oracle:
 1. make the change;
@@ -327,13 +332,55 @@ def post_grade_window_open(
     )
 
 
+def unbumped_drift(
+    cur: dict[str, dict],
+    rec: dict[str, dict],
+    graded: dict[str, int],
+    regrade: dict[str, int],
+) -> list[str]:
+    """Graded queries whose fingerprint differs from the recorded
+    at-grade one with nothing excusing it — the rule
+    tests/test_entry_order.py::test_no_stale_grades_without_regrade_bump
+    enforces. Drift is allowed for a never-graded query, under a pending
+    `_REGRADE` bump (latest grade <= the bump), and while a grade newer
+    than the recorded row awaits `--write` (it certifies current code)."""
+    return sorted(
+        n
+        for n in cur
+        if n in rec
+        and drifted_components(cur[n], rec[n])
+        and n in graded
+        and graded[n] > regrade.get(n, -1)
+        and graded[n] <= rec[n].get("graded_round", 0)
+    )
+
+
 def main() -> None:
+    entry_mod = _entry_mod()
     cur = current_fingerprints()
-    graded = _entry_mod()._grading_history()
+    graded = entry_mod._grading_history()
     try:
         rec = recorded_manifest()
     except FileNotFoundError:
         rec = {}
+    if "--write" in sys.argv:
+        merged = merge_manifest(cur, rec, graded)
+        kept = sorted(
+            n
+            for n in merged
+            if any(merged[n][c] != cur[n][c] for c in _COMPONENTS)
+            and graded.get(n, 0) > entry_mod._REGRADE.get(n, -1)
+        )
+        with open(MANIFEST, "w") as fh:
+            json.dump(merged, fh, indent=0, sort_keys=True)
+            fh.write("\n")
+        print(f"wrote {len(merged)} entries to {MANIFEST}")
+        if kept:
+            print(
+                "kept fingerprint-at-latest-grade (drifted, no newer "
+                f"grade, no pending bump — needs a _REGRADE bump): {kept}"
+            )
+        return
     if post_grade_window_open(rec, graded):
         print(
             "WARNING: post-grade window open — grades newer than the "
@@ -343,29 +390,8 @@ def main() -> None:
             "query code.",
             file=sys.stderr,
         )
-    if "--write" in sys.argv:
-        merged = merge_manifest(cur, rec, graded)
-        kept = sorted(
-            n
-            for n in merged
-            if any(merged[n][c] != cur[n][c] for c in _COMPONENTS)
-        )
-        with open(MANIFEST, "w") as fh:
-            json.dump(merged, fh, indent=0, sort_keys=True)
-            fh.write("\n")
-        print(f"wrote {len(merged)} entries to {MANIFEST}")
-        if kept:
-            print(
-                "kept fingerprint-at-latest-grade (drifted, no newer "
-                f"grade — needs a _REGRADE bump): {kept}"
-            )
-        return
     drift = sorted(
-        set(
-            n
-            for n in cur
-            if n in rec and drifted_components(cur[n], rec[n])
-        )
+        set(unbumped_drift(cur, rec, graded, entry_mod._REGRADE))
         | (set(rec) - set(cur))
         | (set(cur) - set(rec))
     )
