@@ -9,10 +9,12 @@ DataFrame operators so Catalyst plans every distributed step:
 2. spatial BSP           — driver-side pure function over the histogram
                            (partitioner.find_partitions; reference
                            EvenSplitPartitioner.scala).
-3. point→partition assign — broadcast containment theta-join against the
+3. point→partition assign — every input row gets a row id, then a
+                           broadcast containment theta-join against the
                            ε-grown "outer" rectangles; points in overlap
-                           margins are intentionally duplicated (reference
-                           O8, DBSCAN.scala:108-112). BroadcastNestedLoopJoin
+                           margins are intentionally duplicated, each copy
+                           carrying its row's id (reference O8,
+                           DBSCAN.scala:108-112). BroadcastNestedLoopJoin
                            on a table of ≤ thousands of rows.
 4. local clustering      — the boxes are packed longest-first onto
                            ``slots = min(#boxes, defaultParallelism)`` tasks
@@ -22,22 +24,31 @@ DataFrame operators so Catalyst plans every distributed step:
                            .applyInPandas(kernel)`` — Arrow-batched numpy
                            DBSCAN per spatial partition, group size bounded
                            by ``max_points_per_partition`` (reference O9-O10,
-                           whose ``groupByKey`` runs one task per box).
-5. merge                 — every input row carries a row id from just
-                           before step 3, through the kernel. Margin copies
-                           (tagged by the kernel against their own
-                           partition's ε-shrunk inner box) are grouped by
-                           that id: one ``collect_set`` of (pid, cluster)
-                           per point gives the cross-partition cluster
-                           adjacency (O13-O14); driver union-find assigns
-                           global ids over the (tiny) local-cluster graph
-                           (O15, DBSCANGraph.scala); broadcast-join relabel
-                           (O16) and an order-insensitive margin dedup on
-                           the same id (O17 made deterministic, SURVEY.md
-                           §2.3 P5).
-6. union                 — inner ∪ deduped margin (O18) ∪ the rows with a
+                           whose ``groupByKey`` runs one task per box). The
+                           kernel also tags the margin rows: those outside
+                           their own partition's ε-shrunk inner box.
+5. merge                 — ONE ``groupBy`` of the margin rows by row id
+                           reconciles each point's copies (reference
+                           DBSCAN.scala:148-227): the ``collect_set`` of its
+                           non-noise (pid, cluster) copies gives the
+                           cross-partition cluster adjacency (O13-O14) and
+                           the same row's strongest flag and payload come
+                           from the same aggregate. Driver union-find
+                           assigns global ids over the (tiny) local-cluster
+                           graph (O15, DBSCANGraph.scala).
+6. relabel + union       — inner rows (keyed by their own (pid, cluster))
+                           ∪ one row per margin point (keyed by the
+                           smallest (pid, cluster) of its copies: all of
+                           them are pairwise edges, so they share one
+                           global id — O17 made deterministic, SURVEY.md
+                           §2.3 P5) go through ONE broadcast join on the
+                           global-id map (O16), then ∪ the rows with a
                            non-finite coordinate (noise); disjoint by the
                            strict/inclusive containment rules (P6).
+
+Every column created here lives in the ``__dbscan_`` namespace and none is
+ever returned, so a payload column of any other name passes through;
+``cluster`` and ``flag`` are the output names and may not be input columns.
 
 Scale notes (100 TB thinking):
 * Driver state is O(#grid cells) + O(#local clusters) — identical bound to
@@ -45,9 +56,9 @@ Scale notes (100 TB thinking):
   if the cell histogram itself would explode.
 * The only shuffles are the histogram aggregate (partial+final combine),
   the slot repartition for the kernel, and the margin repartition on the
-  row id that both ``groupBy`` aggregates by row id keep; the rectangle
-  and global-id tables are always broadcast, built from pandas so Arrow
-  ships them to the JVM without a Python job.
+  row id that the one ``groupBy`` by row id keeps; the rectangle and
+  global-id tables are always broadcast, built from pandas so Arrow ships
+  them to the JVM without a Python job.
 * The kernel and margin shuffles are sized from ``slots``, not from
   ``spark.sql.shuffle.partitions``: each is the last shuffle of a
   persisted plan, and with
@@ -73,8 +84,35 @@ from dbscan_spark.graph import assign_global_ids
 from dbscan_spark.kernel import local_dbscan_matrix
 from dbscan_spark.partitioner import find_partitions, margins, pack_slots
 
-_RID = "__dbscan_rid"  # internal row id; never part of a returned frame
-_SLOT = "__dbscan_slot"  # kernel task of a box; never part of a returned frame
+# Internal columns, never part of a returned frame. The shared prefix keeps
+# them apart from any payload column (see _check_columns).
+_NS = "__dbscan_"
+_RID = _NS + "rid"  # row id
+_SLOT = _NS + "slot"  # kernel task of a box
+_PID = _NS + "pid"  # spatial partition (BSP box)
+_OX, _OY, _OX2, _OY2 = (_NS + c for c in ("ox", "oy", "ox2", "oy2"))
+_LOCAL = _NS + "local"  # the kernel's cluster id within one box
+_FLAG = _NS + "flag"
+_MARGIN = _NS + "margin"  # outside the box's ε-shrunk inner box
+_GLOBAL = _NS + "global"  # global cluster id
+_IDS = _NS + "ids"  # a margin row's non-noise (pid, local) copies
+_ROW = _NS + "row"  # a row's payload as one struct
+_EDGE = _NS + "edge"
+_CELL = _NS + "cell"
+_CORE = _NS + "core"
+_HIT = _NS + "hit"
+
+
+def _check_columns(df: DataFrame, caller: str) -> None:
+    """``ValueError`` if ``df`` has a column named like an output column
+    (``cluster``, ``flag``) or in the internal namespace."""
+    for name in df.columns:
+        low = name.lower()  # Spark resolves names case-insensitively
+        if low in ("cluster", "flag") or low.startswith(_NS):
+            raise ValueError(
+                f"{caller}: input column {name!r} is reserved: 'cluster' and "
+                f"'flag' are output columns and {_NS!r}* names are internal"
+            )
 
 
 def _rects_df(spark, margin_list, slots):
@@ -87,19 +125,21 @@ def _rects_df(spark, margin_list, slots):
     outer = [o for _pid, _inner, _main, o in margin_list]
     pdf = pd.DataFrame(
         {
-            "pid": np.array([pid for pid, *_ in margin_list], dtype=np.int32),
+            _PID: np.array([pid for pid, *_ in margin_list], dtype=np.int32),
             _SLOT: np.array(
                 pack_slots([m.points for _p, _i, m, _o in margin_list], slots),
                 dtype=np.int32,
             ),
-            "ox": [r.x for r in outer],
-            "oy": [r.y for r in outer],
-            "ox2": [r.x2 for r in outer],
-            "oy2": [r.y2 for r in outer],
+            _OX: [r.x for r in outer],
+            _OY: [r.y for r in outer],
+            _OX2: [r.x2 for r in outer],
+            _OY2: [r.y2 for r in outer],
         }
     )
     return spark.createDataFrame(
-        pdf, f"pid int, {_SLOT} int, ox double, oy double, ox2 double, oy2 double"
+        pdf,
+        f"{_PID} int, {_SLOT} int, {_OX} double, {_OY} double, "
+        f"{_OX2} double, {_OY2} double",
     )
 
 
@@ -151,6 +191,12 @@ def dbscan(
     row order — true of file scans and local data, not of the unordered
     output of a shuffle).
 
+    Column names: ``cluster`` and ``flag`` are the output columns, so an
+    input column of either name (in any case) raises ``ValueError``, as
+    does one starting with ``__dbscan_`` — the namespace of every column
+    the pipeline creates internally. Any other payload column comes back
+    unchanged.
+
     Rows whose x or y is null, NaN or ±inf are not clustered: they stay
     out of the histogram and the partitioner and come back once as
     ``cluster=0, flag='noise'`` with their own payload. ``eps`` must be
@@ -174,6 +220,7 @@ def dbscan(
     min_points = int(min_points)
     if min_points < 1:
         raise ValueError(f"dbscan: min_points must be >= 1, got {min_points}")
+    _check_columns(df, "dbscan")
     spark = df.sparkSession
     size = 2.0 * eps  # minimumRectangleSize (DBSCAN.scala:74, P7)
     X, Y = F.col(x_col), F.col(y_col)
@@ -186,13 +233,13 @@ def dbscan(
     cell_rows = (
         df.filter(finite)
         .groupBy(
-            (F.floor(X / size) * size).alias("cx"),
-            (F.floor(Y / size) * size).alias("cy"),
+            (F.floor(X / size) * size).alias(_NS + "cx"),
+            (F.floor(Y / size) * size).alias(_NS + "cy"),
         )
         .count()
         .collect()
     )
-    hist = {(r["cx"], r["cy"]): r["count"] for r in cell_rows}
+    hist = {(cx, cy): n for cx, cy, n in cell_rows}
     noise = df.select(
         *df.columns,
         F.lit(0).cast("long").alias("cluster"),
@@ -213,13 +260,13 @@ def dbscan(
     #       of a row carries the row's id. A non-finite coordinate matches
     #       no box, so those rows never reach the kernel ------------------
     in_outer = (
-        (X >= F.col("ox")) & (X <= F.col("ox2"))
-        & (Y >= F.col("oy")) & (Y <= F.col("oy2"))
+        (X >= F.col(_OX)) & (X <= F.col(_OX2))
+        & (Y >= F.col(_OY)) & (Y <= F.col(_OY2))
     )
     assigned = (
         df.withColumn(_RID, F.monotonically_increasing_id())
         .join(F.broadcast(rects), in_outer)
-        .select("pid", _SLOT, _RID, *df.columns)
+        .select(_PID, _SLOT, _RID, *df.columns)
     )
 
     # -- 4. per-partition numpy DBSCAN kernel ------------------------------
@@ -233,9 +280,9 @@ def dbscan(
     out_schema = T.StructType(
         assigned.schema.fields
         + [
-            T.StructField("cluster", T.LongType(), False),
-            T.StructField("flag", T.StringType(), False),
-            T.StructField("in_margin", T.BooleanType(), False),
+            T.StructField(_LOCAL, T.LongType(), False),
+            T.StructField(_FLAG, T.StringType(), False),
+            T.StructField(_MARGIN, T.BooleanType(), False),
         ]
     )
 
@@ -244,19 +291,12 @@ def dbscan(
         for pid, inner, _main, _outer in margin_list
     }
 
-    def _cluster_group(pdf):
+    def _cluster_group(pdf):  # one box; a grouped map never passes an empty one
         xs = pdf[x_col].to_numpy(dtype=np.float64)
         ys = pdf[y_col].to_numpy(dtype=np.float64)
         if features_col is not None:
-            X = (
-                np.stack(pdf[features_col].to_numpy())
-                if len(pdf)
-                else np.zeros((0, 2))
-            )
-            X = np.asarray(X, dtype=np.float64)
-            if len(X) and not (
-                np.array_equal(X[:, 0], xs) and np.array_equal(X[:, 1], ys)
-            ):
+            X = np.asarray(np.stack(pdf[features_col].to_numpy()), np.float64)
+            if not (np.array_equal(X[:, 0], xs) and np.array_equal(X[:, 1], ys)):
                 raise ValueError(
                     f"dbscan: ({x_col!r}, {y_col!r}) must equal the first "
                     f"two components of {features_col!r} — the spatial "
@@ -266,127 +306,128 @@ def dbscan(
         else:
             X = np.column_stack([xs, ys])
         labels, flags = local_dbscan_matrix(X, eps, min_points)
-        out = pdf.copy()
-        out["cluster"] = labels
-        out["flag"] = flags
-        if len(pdf):
-            ix, iy, ix2, iy2 = inner_bounds[int(pdf["pid"].iloc[0])]
-            out["in_margin"] = ~(
-                (xs > ix) & (xs < ix2) & (ys > iy) & (ys < iy2)
-            )
-        else:
-            out["in_margin"] = np.zeros(0, dtype=bool)
-        return out
+        ix, iy, ix2, iy2 = inner_bounds[int(pdf[_PID].iloc[0])]
+        return pdf.assign(
+            **{
+                _LOCAL: labels,
+                _FLAG: flags,
+                _MARGIN: ~((xs > ix) & (xs < ix2) & (ys > iy) & (ys < iy2)),
+            }
+        )
 
     # Slot s is Spark partition s (``repartitionById``; a hash of the slot
     # could land two slots in one task), and ``groupBy`` reuses that
     # exchange. A group is still one box, so its size bound is unchanged.
     clustered = (
         assigned.repartitionById(slots, _SLOT)
-        .groupBy(_SLOT, "pid")
+        .groupBy(_SLOT, _PID)
         .applyInPandas(_cluster_group, out_schema)
         .persist()
     )
 
-    # -- 5a. adjacency: same row under two different (pid, cluster) ids,
-    #        both non-noise ⇒ those local clusters are one global cluster.
-    #        One collect_set aggregate groups each margin row's
-    #        (pid, cluster) copies by row id; the pair expansion is a
-    #        per-row HOF over sets bounded by the number of rectangles
-    #        overlapping one point (≤4 in the BSP grid) -------------------
-    #    Both aggregates by row id below (here and in 6b) keep this
-    #    ``slots``-wide exchange: AQE does not coalesce the last shuffle of
-    #    a persisted plan (6b's), so an unsized one runs
-    #    spark.sql.shuffle.partitions tasks.
-    margin = clustered.filter(F.col("in_margin")).repartition(slots, _RID)
-    per_point = (
-        margin.filter(F.col("cluster") > 0)
+    # -- 5. the margin merge: ONE aggregate per margin row id. ``ids`` is
+    #       the set of the row's non-noise (pid, local cluster) copies
+    #       (collect_set skips the nulls of noise copies); the strongest
+    #       flag core > border > noise and the payload (every copy carries
+    #       the same) come from the same groupBy. The edge collect below
+    #       reads only ``ids``, so Catalyst prunes the other two there.
+    #       This ``slots``-wide exchange is the last shuffle of the
+    #       persisted result: AQE does not coalesce it, so an unsized one
+    #       would run spark.sql.shuffle.partitions tasks --------------------
+    local_id = F.struct(F.col(_PID).alias("p"), F.col(_LOCAL).alias("c"))
+    flag_rank = (
+        F.when(F.col(_FLAG) == "core", 2)
+        .when(F.col(_FLAG) == "border", 1)
+        .otherwise(0)
+    )
+    per_row = (
+        clustered.filter(F.col(_MARGIN))
+        .repartition(slots, _RID)
         .groupBy(_RID)
         .agg(
-            F.collect_set(
-                F.struct(F.col("pid").alias("p"), F.col("cluster").alias("c"))
-            ).alias("ids")
+            F.collect_set(F.when(F.col(_LOCAL) > 0, local_id)).alias(_IDS),
+            F.max(F.struct(flag_rank.alias("r"), F.col(_FLAG).alias("f"))).alias(_FLAG),
+            F.any_value(F.struct(*df.columns)).alias(_ROW),
         )
     )
+
+    # -- 5a. adjacency: same row under two different (pid, cluster) ids
+    #        ⇒ those local clusters are one global cluster. The pair
+    #        expansion is a per-row HOF over sets bounded by the number of
+    #        rectangles overlapping one point (≤4 in the BSP grid) --------
     pairs = F.expr(
-        "filter(flatten(transform(ids, a -> transform(ids, b -> "
+        f"filter(flatten(transform({_IDS}, a -> transform({_IDS}, b -> "
         "struct(a.p AS p1, a.c AS c1, b.p AS p2, b.c AS c2)))), "
-        "x -> x.p1 < x.p2)"
+        "e -> e.p1 < e.p2)"
     )
-    edges_df = per_point.select(F.explode(pairs).alias("e")).select(
-        "e.p1", "e.c1", "e.p2", "e.c2"
-    )
+    edges_df = per_row.select(F.explode(pairs).alias(_EDGE))
 
     # -- 5b. driver union-find over local-cluster ids (tiny). The distinct
     #        local ids ride along in the SAME job as the adjacency edges
-    #        (union with null right-hand side), and ONE distinct over the
-    #        fused union dedupes both row kinds (they can't collide: id
-    #        rows have null p2) — one driver round-trip, one dedup
-    #        exchange for the whole merge phase ---------------------------
-    ids_df = clustered.filter(F.col("cluster") > 0).select(
-        F.col("pid").alias("p1"),
-        F.col("cluster").alias("c1"),
-        F.lit(None).cast("int").alias("p2"),
-        F.lit(None).cast("long").alias("c2"),
+    #        (null p2/c2), and ONE distinct over the fused union dedupes
+    #        both kinds (they can't collide: id rows have null p2) — one
+    #        driver round-trip, one dedup exchange for the whole merge ----
+    ids_df = clustered.filter(F.col(_LOCAL) > 0).select(
+        F.struct(
+            F.col(_PID).alias("p1"),
+            F.col(_LOCAL).alias("c1"),
+            F.lit(None).cast("int").alias("p2"),
+            F.lit(None).cast("long").alias("c2"),
+        ).alias(_EDGE)
     )
-    fused_rows = edges_df.unionByName(ids_df).distinct().collect()
-    edge_rows = [r for r in fused_rows if r.p2 is not None]
-    local_ids = [(r.p1, r.c1) for r in fused_rows if r.p2 is None]
+    # collected as flat rows: a nested Row per edge held ~0.3 MB more
+    # driver memory on 1.4k edges and ids when measured
+    fused = (
+        edges_df.unionByName(ids_df).distinct().select(f"{_EDGE}.*").collect()
+    )
     gmap = assign_global_ids(
-        local_ids, [((r.p1, r.c1), (r.p2, r.c2)) for r in edge_rows]
+        [(p1, c1) for p1, c1, p2, _c2 in fused if p2 is None],
+        [((p1, c1), (p2, c2)) for p1, c1, p2, c2 in fused if p2 is not None],
     )
     gmap_df = spark.createDataFrame(  # typed as in _rects_df, for the same reason
         pd.DataFrame(
             {
-                "pid": np.fromiter((p for p, _c in gmap), np.int32, len(gmap)),
-                "cluster": np.fromiter((c for _p, c in gmap), np.int64, len(gmap)),
-                "global_cluster": np.fromiter(gmap.values(), np.int64, len(gmap)),
+                _PID: np.fromiter((p for p, _c in gmap), np.int32, len(gmap)),
+                _LOCAL: np.fromiter((c for _p, c in gmap), np.int64, len(gmap)),
+                _GLOBAL: np.fromiter(gmap.values(), np.int64, len(gmap)),
             }
         ),
-        "pid int, cluster long, global_cluster long",
-    )
-    gcluster = F.coalesce("global_cluster", F.lit(0))
-
-    # -- 6a. inner points: strictly inside own partition's inner box keep
-    #        exactly one copy — a plain cached-scan filter; relabel via
-    #        broadcast map (left join keeps noise at 0) -------------------
-    inner_final = (
-        clustered.filter(~F.col("in_margin"))
-        .join(F.broadcast(gmap_df), ["pid", "cluster"], "left")
-        .select(*df.columns, gcluster.alias("cluster"), "flag")
+        f"{_PID} int, {_LOCAL} long, {_GLOBAL} long",
     )
 
-    # -- 6b. margin dedup by row id: order-insensitive replacement for the
-    #        reference's nondeterministic "last non-noise wins" fold (P5):
-    #        take max global id (density-connected copies share one id)
-    #        and the strongest flag core > border > noise; every copy
-    #        carries the same payload -----------------------------------
-    flag_rank = (
-        F.when(F.col("flag") == "core", 2)
-        .when(F.col("flag") == "border", 1)
-        .otherwise(0)
-    )
-    margin_final = (
-        margin.join(F.broadcast(gmap_df), ["pid", "cluster"], "left")
-        .groupBy(_RID)
-        .agg(
-            F.max(gcluster).alias("cluster"),
-            F.max(F.struct(flag_rank.alias("r"), F.col("flag"))).alias("_f"),
-            F.any_value(F.struct(*df.columns)).alias("_row"),
+    # -- 6. relabel: an inner row (strictly inside its own box's inner box:
+    #       its one copy) keeps its (pid, cluster) key; a margin row takes
+    #       the smallest of its copies' — every pair of them is an edge, so
+    #       all share one global id (the reference's order-dependent "last
+    #       non-noise wins" fold made deterministic, P5). ONE broadcast left
+    #       join on the global-id map relabels both; a null key (noise in
+    #       every copy) finds no match and stays 0 ----------------------------
+    key = F.array_min(_IDS)
+    keyed = (
+        clustered.filter(~F.col(_MARGIN))
+        .select(*df.columns, _PID, _LOCAL, _FLAG)
+        .unionByName(
+            per_row.select(
+                f"{_ROW}.*",
+                key["p"].alias(_PID),
+                key["c"].alias(_LOCAL),
+                F.col(_FLAG)["f"].alias(_FLAG),
+            )
         )
-        .select("_row.*", "cluster", F.col("_f.flag").alias("flag"))
+    )
+    relabelled = keyed.join(F.broadcast(gmap_df), [_PID, _LOCAL], "left").select(
+        *df.columns,
+        F.coalesce(_GLOBAL, F.lit(0)).alias("cluster"),
+        F.col(_FLAG).alias("flag"),
     )
 
-    # -- 6c. rows with a non-finite coordinate: noise, payload untouched --
-    nonfinite = noise.filter(~finite)
-
-    # -- 7. materialize the result, then release the kernel cache (it was
-    #       only ever needed once more after the merge collect; the result
-    #       keeps full lineage, so fault recovery recomputes rather than
-    #       relying on unreliable checkpoint storage) --------------------
-    result = _materialized(
-        inner_final.unionByName(margin_final).unionByName(nonfinite)
-    )
+    # -- 7. ∪ the rows with a non-finite coordinate (noise, payload
+    #       untouched); materialize the result, then release the kernel
+    #       cache (it was only ever needed once more after the merge
+    #       collect; the result keeps full lineage, so fault recovery
+    #       recomputes rather than relying on unreliable checkpoint
+    #       storage) -----------------------------------------------------
+    result = _materialized(relabelled.unionByName(noise.filter(~finite)))
     clustered.unpersist()
     return result
 
@@ -419,42 +460,44 @@ def predict(
     correct because a projection distance never exceeds the full distance,
     so the ring is a superset of the true n-D ε-neighborhood.
 
-    ``eps`` must be finite and > 0, as for :func:`dbscan`; anything else
+    ``eps`` must be finite and > 0, as for :func:`dbscan`. As there, a
+    ``new_points`` column named ``cluster`` or ``flag`` (the output
+    columns) or starting with ``__dbscan_`` (the internal namespace) is
+    refused; any other probe column comes back unchanged. Each of these
     raises ``ValueError`` before any Spark job runs.
     """
     eps = _checked_eps(eps, "predict")
-    core_cols = [
-        F.col(x_col).alias("core_x"),
-        F.col(y_col).alias("core_y"),
-        F.col("cluster").alias("core_cluster"),
-        F.floor(F.col(x_col) / eps).cast("long").alias("cell_x"),
-        F.floor(F.col(y_col) / eps).cast("long").alias("cell_y"),
-    ]
+    _check_columns(new_points, "predict")
+    X, Y = F.col(x_col), F.col(y_col)
+    cx, cy = F.floor(X / eps).cast("long"), F.floor(Y / eps).cast("long")
+    fields = [X.alias("x"), Y.alias("y"), F.col("cluster").alias("cluster")]
     if features_col is not None:
-        core_cols.append(F.col(features_col).alias("core_feats"))
-    cores = model.filter(F.col("flag") == "core").select(*core_cols)
-    probes = (
-        new_points.withColumn(_RID, F.monotonically_increasing_id())
-        .withColumn("_cx", F.floor(F.col(x_col) / eps).cast("long"))
-        .withColumn("_cy", F.floor(F.col(y_col) / eps).cast("long"))
-        .withColumn("_ox", F.expr("explode(array(-1L, 0L, 1L))"))
-        .withColumn("_oy", F.expr("explode(array(-1L, 0L, 1L))"))
-        .withColumn("cell_x", F.col("_cx") + F.col("_ox"))
-        .withColumn("cell_y", F.col("_cy") + F.col("_oy"))
+        fields.append(F.col(features_col).alias("feats"))
+    cores = model.filter(F.col("flag") == "core").select(
+        F.struct(cx.alias("x"), cy.alias("y")).alias(_CELL),
+        F.struct(*fields).alias(_CORE),
     )
+    ring = F.array(
+        *(
+            F.struct((cx + dx).alias("x"), (cy + dy).alias("y"))
+            for dx in (-1, 0, 1)
+            for dy in (-1, 0, 1)
+        )
+    )
+    probes = new_points.withColumn(
+        _RID, F.monotonically_increasing_id()
+    ).withColumn(_CELL, F.explode(ring))
+    core = F.col(_CORE)
     if features_col is not None:
         dist2 = F.aggregate(
             F.zip_with(
-                F.col(features_col),
-                F.col("core_feats"),
-                lambda a, b: (a - b) * (a - b),
+                F.col(features_col), core["feats"], lambda a, b: (a - b) * (a - b)
             ),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
     else:
-        dx = F.col(x_col) - F.col("core_x")
-        dy = F.col(y_col) - F.col("core_y")
+        dx, dy = X - core["x"], Y - core["y"]
         dist2 = dx * dx + dy * dy
 
     # the left join keeps every probe, even one whose candidate cells hold
@@ -462,21 +505,20 @@ def predict(
     # aggregate stays in the lineage of ONE evaluation of the row id, so
     # ids never have to agree across two scans of ``new_points``.
     hit = F.when(
-        dist2 <= eps * eps,
-        F.struct(dist2.alias("d2"), F.col("core_cluster").alias("c")),
+        dist2 <= eps * eps, F.struct(dist2.alias("d2"), core["cluster"].alias("c"))
     )
     best = (
-        probes.join(cores, ["cell_x", "cell_y"], "left")
+        probes.join(cores, _CELL, "left")
         .groupBy(_RID)
         .agg(
-            F.min(hit).alias("_hit"),
-            F.any_value(F.struct(*new_points.columns)).alias("_row"),
+            F.min(hit).alias(_HIT),
+            F.any_value(F.struct(*new_points.columns)).alias(_ROW),
         )
     )
     return best.select(
-        "_row.*",
-        F.coalesce(F.col("_hit.c"), F.lit(0)).alias("cluster"),
-        F.when(F.col("_hit").isNotNull(), F.lit("border"))
+        f"{_ROW}.*",
+        F.coalesce(F.col(_HIT)["c"], F.lit(0)).alias("cluster"),
+        F.when(F.col(_HIT).isNotNull(), F.lit("border"))
         .otherwise(F.lit("noise"))
         .alias("flag"),
     )

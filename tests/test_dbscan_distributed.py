@@ -140,13 +140,22 @@ def test_skewed_hot_cell_end_to_end(spark):
     assert ok
 
 
-def test_passthrough_columns(spark):
+@pytest.mark.parametrize(
+    "tag", ["tag", "pid", "ox", "in_margin", "global_cluster"]
+)
+def test_passthrough_columns(spark, tag):
+    """A payload column comes back once per row with its own value, also
+    when it is named like a column the pipeline once used internally.
+    Cap 2 splits the input into several boxes, so rows (10, 11) are margin
+    rows and the merge path carries the payload too."""
     df = spark.createDataFrame(
         [(10, 0.0, 0.0, "a"), (11, 0.1, 0.0, "b"), (12, 5.0, 5.0, "c")],
-        "id long, x double, y double, tag string",
+        f"id long, x double, y double, {tag} string",
     )
-    rows = dbscan(df, eps=0.5, min_points=2).collect()
-    assert {r["tag"] for r in rows} == {"a", "b", "c"}
+    rows = dbscan(df, eps=0.5, min_points=2, max_points_per_partition=2).collect()
+    assert sorted((r["id"], r[tag]) for r in rows) == [
+        (10, "a"), (11, "b"), (12, "c")
+    ]
     by_id = {r["id"]: r for r in rows}
     assert by_id[10]["cluster"] == by_id[11]["cluster"] > 0
     assert by_id[12]["cluster"] == 0 and by_id[12]["flag"] == "noise"
@@ -295,6 +304,51 @@ def test_predict_ignores_null_payload(spark):
     assert sorted(r["nid"] for r in rows) == [1, 2]
     assert {r["nid"]: r["tag"] for r in rows} == {1: "a", 2: None}
     assert all(r["cluster"] == 7 and r["flag"] == "border" for r in rows)
+
+
+@pytest.mark.parametrize(
+    "payload", ["cell_x", "_cx", "_ox", "core_x", "core_cluster"]
+)
+def test_predict_passes_any_payload(spark, payload):
+    """A probe column named like one predict() once used internally comes
+    back with its own value, and the probe gets the right label."""
+    model = spark.createDataFrame(
+        [(0.0, 0.0, 7, "core"), (5.0, 5.0, 9, "core")],
+        "x double, y double, cluster long, flag string",
+    )
+    probes = spark.createDataFrame(
+        [(1, 0.05, 0.0, 101), (2, 4.9, 5.0, 102), (3, 20.0, 20.0, 103)],
+        f"nid long, x double, y double, {payload} long",
+    )
+    rows = {r["nid"]: r for r in predict(model, probes, eps=0.3).collect()}
+    assert {n: r[payload] for n, r in rows.items()} == {1: 101, 2: 102, 3: 103}
+    assert {n: (r["cluster"], r["flag"]) for n, r in rows.items()} == {
+        1: (7, "border"),
+        2: (9, "border"),
+        3: (0, "noise"),
+    }
+
+
+@pytest.mark.parametrize("name", ["cluster", "flag", "Flag", "__dbscan_rid"])
+def test_reserved_columns_raise_before_spark(spark, name):
+    """An input column named like an output column (or in the internal
+    namespace) is refused with a ValueError naming it, before any job."""
+    df = spark.createDataFrame(
+        [(0, 0.0, 0.0, 1)], f"id long, x double, y double, {name} long"
+    )
+    model = spark.createDataFrame(
+        [(0.0, 0.0, 1, "core")], "x double, y double, cluster long, flag string"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("reserved-columns", "reserved-columns")
+    try:
+        with pytest.raises(ValueError, match=name):
+            dbscan(df, eps=0.5, min_points=1)
+        with pytest.raises(ValueError, match=name):
+            predict(model, df, eps=0.5)
+        assert not sc.statusTracker().getJobIdsForGroup("reserved-columns")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 @pytest.mark.parametrize(

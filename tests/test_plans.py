@@ -752,7 +752,10 @@ def test_dbscan_flags_projection_reuses_pipeline(spark):
     }
     assert len(conds) == 1, conds
     (cond,) = conds
-    assert all(f"{c} >= o{c}" in cond and f"{c} <= o{c}2" in cond for c in "xy")
+    assert all(
+        f"{c} >= __dbscan_o{c}" in cond and f"{c} <= __dbscan_o{c}2" in cond
+        for c in "xy"
+    )
 
 
 def test_ohlc_is_single_aggregation_no_window(spark):
