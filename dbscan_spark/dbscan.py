@@ -24,27 +24,25 @@ DataFrame operators so Catalyst plans every distributed step:
                            .applyInPandas(kernel)`` — Arrow-batched numpy
                            DBSCAN per spatial partition, group size bounded
                            by ``max_points_per_partition`` (reference O9-O10,
-                           whose ``groupByKey`` runs one task per box). The
-                           kernel also tags the margin rows: those outside
-                           their own partition's ε-shrunk inner box.
-5. merge                 — ONE ``groupBy`` of the margin rows by row id
-                           reconciles each point's copies (reference
+                           whose ``groupByKey`` runs one task per box).
+5. merge                 — ONE persisted ``groupBy`` of every kernel row by
+                           row id reconciles each point's copies (reference
                            DBSCAN.scala:148-227): the ``collect_set`` of its
-                           non-noise (pid, cluster) copies gives the
-                           cross-partition cluster adjacency (O13-O14) and
-                           the same row's strongest flag and payload come
-                           from the same aggregate. Driver union-find
-                           assigns global ids over the (tiny) local-cluster
-                           graph (O15, DBSCANGraph.scala).
-6. relabel + union       — inner rows (keyed by their own (pid, cluster))
-                           ∪ one row per margin point (keyed by the
-                           smallest (pid, cluster) of its copies: all of
-                           them are pairwise edges, so they share one
-                           global id — O17 made deterministic, SURVEY.md
-                           §2.3 P5) go through ONE broadcast join on the
-                           global-id map (O16), then ∪ the rows with a
-                           non-finite coordinate (noise); disjoint by the
-                           strict/inclusive containment rules (P6).
+                           non-noise (pid, cluster) copies gives the local
+                           cluster ids and the cross-partition cluster
+                           adjacency (O13-O14) in one collect, and the same
+                           row's strongest flag and payload come from the
+                           same aggregate. Driver union-find assigns global
+                           ids over the (tiny) local-cluster graph (O15,
+                           DBSCANGraph.scala).
+6. relabel               — every aggregate row, keyed by the smallest
+                           (pid, cluster) of its copies (all of them are
+                           pairwise edges, so they share one global id —
+                           O17 made deterministic, SURVEY.md §2.3 P5), goes
+                           through ONE broadcast join on the global-id map
+                           (O16), then ∪ the rows with a non-finite
+                           coordinate (noise), which match no box and so
+                           never reach the kernel.
 
 Every column created here lives in the ``__dbscan_`` namespace and none is
 ever returned, so a payload column of any other name passes through;
@@ -55,13 +53,18 @@ Scale notes (100 TB thinking):
   the reference; raise ``minimum_rectangle_size`` (i.e. eps) or pre-filter
   if the cell histogram itself would explode.
 * The only shuffles are the histogram aggregate (partial+final combine),
-  the slot repartition for the kernel, and the margin repartition on the
-  row id that the one ``groupBy`` by row id keeps; the rectangle and
+  the slot repartition for the kernel, the repartition of every kernel
+  row on the row id that the one ``groupBy`` by row id keeps, and the
+  distinct of the merge graph's (small) id pairs; the rectangle and
   global-id tables are always broadcast, built from pandas so Arrow ships
-  them to the JVM without a Python job.
-* The kernel and margin shuffles are sized from ``slots``, not from
-  ``spark.sql.shuffle.partitions``: each is the last shuffle of a
-  persisted plan, and with
+  them to the JVM without a Python job. The row-id
+  shuffle carries the single-copy rows too (most rows on fragmented
+  data): in exchange, the kernel output is never cached, and the one
+  cached frame, the row-id aggregate, is one row per input row.
+* The kernel and row-id shuffles are sized from ``slots``, not from
+  ``spark.sql.shuffle.partitions``: the kernel one so that slot s is task
+  s, the row-id one because it is the last shuffle of the persisted
+  aggregate, and with
   ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` off
   (Spark's default) AQE leaves that shuffle's partitions as planned — no
   coalescing, no skew split — so an unsized one runs one task per shuffle
@@ -93,9 +96,8 @@ _PID = _NS + "pid"  # spatial partition (BSP box)
 _OX, _OY, _OX2, _OY2 = (_NS + c for c in ("ox", "oy", "ox2", "oy2"))
 _LOCAL = _NS + "local"  # the kernel's cluster id within one box
 _FLAG = _NS + "flag"
-_MARGIN = _NS + "margin"  # outside the box's ε-shrunk inner box
 _GLOBAL = _NS + "global"  # global cluster id
-_IDS = _NS + "ids"  # a margin row's non-noise (pid, local) copies
+_IDS = _NS + "ids"  # a row's non-noise (pid, local) copies
 _ROW = _NS + "row"  # a row's payload as one struct
 _EDGE = _NS + "edge"
 _CELL = _NS + "cell"
@@ -182,10 +184,10 @@ def dbscan(
     Every input row comes back exactly once, with its own payload, whatever
     ``max_points_per_partition`` is: each row is tagged with a row id
     (``monotonically_increasing_id``) just before the assignment join, and
-    the margin merge reconciles a point's copies by that id, so rows with
+    the merge reconciles a point's copies by that id, so rows with
     equal coordinates stay separate rows (the reference instead keys its
     dedup map on the point value, DBSCAN.scala:204-227). The id is
-    computed once, when the cached kernel output materializes. A lost cache
+    computed once, when the cached row-id aggregate materializes. A lost cache
     block is recomputed from the input, which gives the same ids only if
     the input itself recomputes deterministically (same partitions, same
     row order — true of file scans and local data, not of the unordered
@@ -211,7 +213,7 @@ def dbscan(
 
     The returned DataFrame is persisted and already materialized (the
     merge phase is inherently eager — same as the reference); the cached
-    kernel output is released before returning. The RESULT's cache
+    row-id aggregate is released before returning. The RESULT's cache
     belongs to the caller: call ``.unpersist()`` (or
     ``DBSCANModel.unpersist()``) when done, or a loop of dbscan() calls
     accumulates one cached result per call until LRU eviction.
@@ -270,26 +272,13 @@ def dbscan(
     )
 
     # -- 4. per-partition numpy DBSCAN kernel ------------------------------
-    #    The kernel also tags each row's margin candidacy against its OWN
-    #    partition's ε-shrunk inner box (a vectorized bound check on data
-    #    already in memory). A row with copies in two partitions lies
-    #    within ε of its home box's edge, so every copy is tagged, and the
-    #    merge below only ever sees the (small) tagged slice. The inner and
-    #    outer boxes come from the same ``Rectangle.shrink(±eps)`` float
-    #    expression, so no rounding gap opens between the two tests.
     out_schema = T.StructType(
         assigned.schema.fields
         + [
             T.StructField(_LOCAL, T.LongType(), False),
             T.StructField(_FLAG, T.StringType(), False),
-            T.StructField(_MARGIN, T.BooleanType(), False),
         ]
     )
-
-    inner_bounds = {
-        pid: (inner.x, inner.y, inner.x2, inner.y2)
-        for pid, inner, _main, _outer in margin_list
-    }
 
     def _cluster_group(pdf):  # one box; a grouped map never passes an empty one
         xs = pdf[x_col].to_numpy(dtype=np.float64)
@@ -306,14 +295,7 @@ def dbscan(
         else:
             X = np.column_stack([xs, ys])
         labels, flags = local_dbscan_matrix(X, eps, min_points)
-        ix, iy, ix2, iy2 = inner_bounds[int(pdf[_PID].iloc[0])]
-        return pdf.assign(
-            **{
-                _LOCAL: labels,
-                _FLAG: flags,
-                _MARGIN: ~((xs > ix) & (xs < ix2) & (ys > iy) & (ys < iy2)),
-            }
-        )
+        return pdf.assign(**{_LOCAL: labels, _FLAG: flags})
 
     # Slot s is Spark partition s (``repartitionById``; a hash of the slot
     # could land two slots in one task), and ``groupBy`` reuses that
@@ -322,18 +304,17 @@ def dbscan(
         assigned.repartitionById(slots, _SLOT)
         .groupBy(_SLOT, _PID)
         .applyInPandas(_cluster_group, out_schema)
-        .persist()
     )
 
-    # -- 5. the margin merge: ONE aggregate per margin row id. ``ids`` is
-    #       the set of the row's non-noise (pid, local cluster) copies
-    #       (collect_set skips the nulls of noise copies); the strongest
-    #       flag core > border > noise and the payload (every copy carries
-    #       the same) come from the same groupBy. The edge collect below
-    #       reads only ``ids``, so Catalyst prunes the other two there.
-    #       This ``slots``-wide exchange is the last shuffle of the
-    #       persisted result: AQE does not coalesce it, so an unsized one
-    #       would run spark.sql.shuffle.partitions tasks --------------------
+    # -- 5. ONE aggregate per row id over every kernel row, persisted: the
+    #       one cache of the fit, read by the merge collect and the result.
+    #       ``ids`` is the set of the row's non-noise (pid, local cluster)
+    #       copies (collect_set skips the nulls of noise copies); the
+    #       strongest flag core > border > noise and the payload (every
+    #       copy carries the same) come from the same groupBy. This
+    #       ``slots``-wide exchange is the last shuffle of a persisted
+    #       plan: AQE does not coalesce it, so an unsized one would run
+    #       spark.sql.shuffle.partitions tasks --------------------------------
     local_id = F.struct(F.col(_PID).alias("p"), F.col(_LOCAL).alias("c"))
     flag_rank = (
         F.when(F.col(_FLAG) == "core", 2)
@@ -341,48 +322,41 @@ def dbscan(
         .otherwise(0)
     )
     per_row = (
-        clustered.filter(F.col(_MARGIN))
-        .repartition(slots, _RID)
+        clustered.repartition(slots, _RID)
         .groupBy(_RID)
         .agg(
             F.collect_set(F.when(F.col(_LOCAL) > 0, local_id)).alias(_IDS),
             F.max(F.struct(flag_rank.alias("r"), F.col(_FLAG).alias("f"))).alias(_FLAG),
             F.any_value(F.struct(*df.columns)).alias(_ROW),
         )
+        .persist()
     )
 
-    # -- 5a. adjacency: same row under two different (pid, cluster) ids
-    #        ⇒ those local clusters are one global cluster. The pair
-    #        expansion is a per-row HOF over sets bounded by the number of
-    #        rectangles overlapping one point (≤4 in the BSP grid) --------
+    # -- 5a. the merge graph from ``ids`` alone (Catalyst prunes the flag
+    #        and payload): the self-pairs are the local cluster ids, and a
+    #        row under two (pid, cluster) ids ⇒ those local clusters are
+    #        one global cluster (p1 < p2; a row has one copy per box). The
+    #        pair expansion is a per-row HOF over sets bounded by the number
+    #        of rectangles overlapping one point (≤4 in the BSP grid). ONE
+    #        distinct dedupes both kinds — one driver round-trip -----------
     pairs = F.expr(
         f"filter(flatten(transform({_IDS}, a -> transform({_IDS}, b -> "
         "struct(a.p AS p1, a.c AS c1, b.p AS p2, b.c AS c2)))), "
-        "e -> e.p1 < e.p2)"
-    )
-    edges_df = per_row.select(F.explode(pairs).alias(_EDGE))
-
-    # -- 5b. driver union-find over local-cluster ids (tiny). The distinct
-    #        local ids ride along in the SAME job as the adjacency edges
-    #        (null p2/c2), and ONE distinct over the fused union dedupes
-    #        both kinds (they can't collide: id rows have null p2) — one
-    #        driver round-trip, one dedup exchange for the whole merge ----
-    ids_df = clustered.filter(F.col(_LOCAL) > 0).select(
-        F.struct(
-            F.col(_PID).alias("p1"),
-            F.col(_LOCAL).alias("c1"),
-            F.lit(None).cast("int").alias("p2"),
-            F.lit(None).cast("long").alias("c2"),
-        ).alias(_EDGE)
+        "e -> e.p1 <= e.p2)"
     )
     # collected as flat rows: a nested Row per edge held ~0.3 MB more
     # driver memory on 1.4k edges and ids when measured
     fused = (
-        edges_df.unionByName(ids_df).distinct().select(f"{_EDGE}.*").collect()
+        per_row.select(F.explode(pairs).alias(_EDGE))
+        .distinct()
+        .select(f"{_EDGE}.*")
+        .collect()
     )
+
+    # -- 5b. driver union-find over local-cluster ids (tiny) ---------------
     gmap = assign_global_ids(
-        [(p1, c1) for p1, c1, p2, _c2 in fused if p2 is None],
-        [((p1, c1), (p2, c2)) for p1, c1, p2, c2 in fused if p2 is not None],
+        [(p1, c1) for p1, c1, p2, _c2 in fused if p1 == p2],
+        [((p1, c1), (p2, c2)) for p1, c1, p2, c2 in fused if p1 != p2],
     )
     gmap_df = spark.createDataFrame(  # typed as in _rects_df, for the same reason
         pd.DataFrame(
@@ -395,40 +369,36 @@ def dbscan(
         f"{_PID} int, {_LOCAL} long, {_GLOBAL} long",
     )
 
-    # -- 6. relabel: an inner row (strictly inside its own box's inner box:
-    #       its one copy) keeps its (pid, cluster) key; a margin row takes
-    #       the smallest of its copies' — every pair of them is an edge, so
-    #       all share one global id (the reference's order-dependent "last
+    # -- 6. relabel: every row is keyed by the smallest of its copies'
+    #       (pid, cluster) ids — one copy for a row inside its box's inner
+    #       box; every pair of a margin row's copies is an edge, so all
+    #       share one global id (the reference's order-dependent "last
     #       non-noise wins" fold made deterministic, P5). ONE broadcast left
-    #       join on the global-id map relabels both; a null key (noise in
-    #       every copy) finds no match and stays 0 ----------------------------
+    #       join on the global-id map; a null key (noise in every copy)
+    #       finds no match and stays 0 -------------------------------------
     key = F.array_min(_IDS)
-    keyed = (
-        clustered.filter(~F.col(_MARGIN))
-        .select(*df.columns, _PID, _LOCAL, _FLAG)
-        .unionByName(
-            per_row.select(
-                f"{_ROW}.*",
-                key["p"].alias(_PID),
-                key["c"].alias(_LOCAL),
-                F.col(_FLAG)["f"].alias(_FLAG),
-            )
+    relabelled = (
+        per_row.select(
+            f"{_ROW}.*",
+            key["p"].alias(_PID),
+            key["c"].alias(_LOCAL),
+            F.col(_FLAG)["f"].alias(_FLAG),
         )
-    )
-    relabelled = keyed.join(F.broadcast(gmap_df), [_PID, _LOCAL], "left").select(
-        *df.columns,
-        F.coalesce(_GLOBAL, F.lit(0)).alias("cluster"),
-        F.col(_FLAG).alias("flag"),
+        .join(F.broadcast(gmap_df), [_PID, _LOCAL], "left")
+        .select(
+            *df.columns,
+            F.coalesce(_GLOBAL, F.lit(0)).alias("cluster"),
+            F.col(_FLAG).alias("flag"),
+        )
     )
 
     # -- 7. ∪ the rows with a non-finite coordinate (noise, payload
-    #       untouched); materialize the result, then release the kernel
-    #       cache (it was only ever needed once more after the merge
-    #       collect; the result keeps full lineage, so fault recovery
+    #       untouched); materialize the result, then release the row-id
+    #       aggregate (the result keeps full lineage, so fault recovery
     #       recomputes rather than relying on unreliable checkpoint
     #       storage) -----------------------------------------------------
     result = _materialized(relabelled.unionByName(noise.filter(~finite)))
-    clustered.unpersist()
+    per_row.unpersist()
     return result
 
 

@@ -202,8 +202,6 @@ def local_dbscan(
     X = np.column_stack(
         [np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)]
     )
-    if X.size == 0:
-        X = X.reshape(0, 2)
     return local_dbscan_matrix(X, eps, min_points)
 
 

@@ -140,21 +140,37 @@ def test_skewed_hot_cell_end_to_end(spark):
     assert ok
 
 
+_TAGS = ["tag", "pid", "ox", "in_margin", "global_cluster"]
+
+
 @pytest.mark.parametrize(
-    "tag", ["tag", "pid", "ox", "in_margin", "global_cluster"]
+    "tag,cap",
+    [pytest.param(t, 2, id=t) for t in _TAGS]
+    + [pytest.param(t, 1000, id=f"{t}-one-copy") for t in _TAGS],
 )
-def test_passthrough_columns(spark, tag):
+def test_passthrough_columns(spark, tag, cap):
     """A payload column comes back once per row with its own value, also
-    when it is named like a column the pipeline once used internally.
-    Cap 2 splits the input into several boxes, so rows (10, 11) are margin
-    rows and the merge path carries the payload too."""
+    when it is named like a column the pipeline once used internally, or
+    is an array or a map holding nulls. Cap 2 splits the input into
+    several boxes, so rows (10, 11) are margin rows and the merge carries
+    the payload of copies; cap 1000 leaves one box, so every row is one
+    copy and the payload passes the row-id aggregate alone."""
     df = spark.createDataFrame(
-        [(10, 0.0, 0.0, "a"), (11, 0.1, 0.0, "b"), (12, 5.0, 5.0, "c")],
-        f"id long, x double, y double, {tag} string",
+        [
+            (10, 0.0, 0.0, "a", ["u", None], {"k": 1, "n": None}),
+            (11, 0.1, 0.0, "b", None, None),
+            (12, 5.0, 5.0, "c", [], {"k": None}),
+        ],
+        f"id long, x double, y double, {tag} string, "
+        "arr array<string>, m map<string,int>",
     )
-    rows = dbscan(df, eps=0.5, min_points=2, max_points_per_partition=2).collect()
-    assert sorted((r["id"], r[tag]) for r in rows) == [
-        (10, "a"), (11, "b"), (12, "c")
+    rows = dbscan(
+        df, eps=0.5, min_points=2, max_points_per_partition=cap
+    ).collect()
+    assert sorted((r["id"], r[tag], r["arr"], r["m"]) for r in rows) == [
+        (10, "a", ["u", None], {"k": 1, "n": None}),
+        (11, "b", None, None),
+        (12, "c", [], {"k": None}),
     ]
     by_id = {r["id"]: r for r in rows}
     assert by_id[10]["cluster"] == by_id[11]["cluster"] > 0
@@ -441,7 +457,12 @@ def test_kernel_stage_runs_one_task_per_slot(spark, tmp_path, monkeypatch):
     the kernel runs exactly ``slots`` tasks, together they cover partitions
     0..slots-1, and no stage of the fit runs more than 2 × slots plus the
     input's partition count. The kernel is wrapped so each call leaves a
-    file naming its stage and partition."""
+    file naming its stage and partition.
+
+    The fit also runs at most 12 jobs, the count measured when the
+    row-id aggregate became the fit's one cache (3 fits, 12 each). The
+    plan before it, which cached the kernel output and read it in two
+    branches, ran 14: a higher count means a fit phase came back."""
     import os
     import sys
     import time
@@ -478,6 +499,13 @@ def test_kernel_stage_runs_one_task_per_slot(spark, tmp_path, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     result.unpersist()
+    # a job after the fit: once the tracker lists it, it has seen every job
+    # of the fit (the listener bus delivers events in order)
+    sc.setJobGroup(group + "-end", "after the fit")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
     calls = [tuple(map(int, f.split("_")[:2])) for f in os.listdir(out)]
     kernel_stages = {s for s, _p in calls}
@@ -491,9 +519,12 @@ def test_kernel_stage_runs_one_task_per_slot(spark, tmp_path, monkeypatch):
             for sid in st.getJobInfo(jid).stageIds
         }
         done = {sid: i for sid, i in stages.items() if i and i.numCompletedTasks}
-        if kernel_stages <= set(done) or time.time() > deadline:
+        seen_all = bool(st.getJobIdsForGroup(group + "-end"))
+        if (kernel_stages <= set(done) and seen_all) or time.time() > deadline:
             break
         time.sleep(0.2)
+    jobs = st.getJobIdsForGroup(group)
+    assert len(jobs) <= 12, len(jobs)
     for sid in kernel_stages:
         assert done[sid].numTasks == slots, (sid, done[sid].numTasks, slots)
     bound = 2 * slots + n_in
